@@ -26,9 +26,12 @@ object Bench {
     * single shared filename let the 8-CPU run clobber the 32-core map and
     * left PERF_r14 with an empty per_query. Each core count now writes its
     * own artifact, and the shared `BENCH_FULL_latest.json` is only updated
-    * by a run at >= the core count already recorded there. */
-  def fullOutPathFor(cpus: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", s"bench/BENCH_FULL_c$cpus.json")
+    * by a warm run at >= the core count already recorded there. A cold-read
+    * run writes `_cold` beside the warm map and never touches `latest`, so
+    * no artifact mixes warm-cache and cold-read numbers. */
+  def fullOutPathFor(cpus: String, cold: Boolean): String =
+    sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
+      s"bench/BENCH_FULL_c$cpus${if (cold) "_cold" else ""}.json")
 
   /** Quiet-host medians of two cheap, stable queries (recorded across the
     * r14/r15 solo runs). A bench run whose anchors land far above these is
@@ -129,12 +132,12 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"[bench] full-artifact write failed ($path): ${e.getMessage}")
       }
-      write(fullOutPathFor(cpus))
-      // keep the shared "latest" pointer for whoever reads a fixed name,
+      write(fullOutPathFor(cpus, cold))
+      // keep the shared "latest" pointer (warm runs only) for whoever reads a fixed name,
       // but NEVER let a lower-core scaling run clobber a higher-core map
       // (the r14 failure mode). Self-describing via the embedded cpus
       // field of the existing file.
-      if (sys.env.get("SPARK_GRAFT_BENCH_FULL").isEmpty) {
+      if (!cold && sys.env.get("SPARK_GRAFT_BENCH_FULL").isEmpty) {
         val latest = java.nio.file.Paths.get("bench/BENCH_FULL_latest.json")
         val prevCpus = try {
           if (java.nio.file.Files.exists(latest))

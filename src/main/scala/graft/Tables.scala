@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Loaders for the driver's fixed Parquet tables (TESTDATA.md).
@@ -115,9 +120,8 @@ object Tables {
     if (estBytes < BigInt(maxSplit) * dp) df.repartition(dp) else df
   }
 
-  /** Scopes session-conf overrides around a body (an iterative loop,
-    * typically), restoring the prior values afterwards — the same
-    * discipline as StreamQueries.withStreamPartitions. */
+  /** Scopes session-conf overrides around a body (an iterative loop or a
+    * streaming replay, typically), restoring the prior values afterwards. */
   def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
     val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
     kvs.foreach { case (k, v) => s.conf.set(k, v) }
@@ -126,6 +130,39 @@ object Tables {
       case (k, None) => s.conf.unset(k)
     }
   }
+
+  /** Per-process work directory for the files queries write while they
+    * are built (stream replays and checkpoints, persisted derived
+    * relations, oracle inputs): checkout-relative (overridable via
+    * GRAFT_ORACLE_INPUT_DIR), never a hardcoded absolute path, and
+    * suffixed with the JVM pid so two concurrent processes (bench +
+    * verify, forked test suites) never race on the same part files. */
+  val workBase: String = {
+    val b = sys.env.getOrElse("GRAFT_ORACLE_INPUT_DIR",
+      s"${sys.props("user.dir")}/target/oracle_inputs")
+    s"$b/p${ProcessHandle.current().pid()}"
+  }
+
+  private val sessionDirs =
+    new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
+  private val sessionSeq = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** [[workBase]] narrowed to one session. Derived files are memoized per
+    * session, so a second session rebuilding them must not rewrite (and so
+    * invalidate) the files a first session's DataFrames already list. */
+  def workDir(s: SparkSession): String =
+    sessionDirs.computeIfAbsent(s, _ => s"$workBase/s${sessionSeq.incrementAndGet()}")
+
+  private val ObservationWait = 60.seconds
+
+  /** The metrics row of an `observe()`d action that has already run. Waits
+    * at most [[ObservationWait]]: a metric that never arrives (the action
+    * did not run, or stopped reporting) fails `step` loudly instead of
+    * blocking forever. */
+  def observed(obs: Observation, step: String): Row =
+    try Await.result(obs.future, ObservationWait)
+    catch { case e: TimeoutException => throw new IllegalStateException(
+      s"$step: observe() metrics did not arrive within $ObservationWait", e) }
 
   /* "Tables.pinned" — persist + EAGER materialization (rationale kept as
    * the canonical reference for the inline `persist(); count() // eager`

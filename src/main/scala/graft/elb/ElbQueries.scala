@@ -21,20 +21,12 @@ import graft.ops.Sessionize
   */
 object ElbQueries {
 
-  /** Location the oracle SQL references. Derived from the checkout
-    * (`user.dir`, overridable via GRAFT_ORACLE_INPUT_DIR) — never a
-    * hardcoded absolute path — and suffixed with the JVM pid so two
-    * concurrent processes (bench + verify, forked test suites) can never
-    * race on the same part files: `mode(overwrite)` renames parts, which
-    * would invalidate a sibling process's captured file listing. The
-    * oracle SQL strings embed this same absolute path, and they are
-    * emitted by the SAME process that wrote the files, so the DuckDB side
-    * always reads the bytes this process persisted. */
-  private val OracleInputDir: String = {
-    val base = sys.env.getOrElse("GRAFT_ORACLE_INPUT_DIR",
-      s"${sys.props("user.dir")}/target/oracle_inputs")
-    s"$base/p${ProcessHandle.current().pid()}"
-  }
+  /** Location the oracle SQL references: the per-process work dir, not a
+    * per-session one, because the oracle SQL strings are session-free.
+    * They are emitted by the SAME process that wrote the files, so the
+    * DuckDB side always reads the bytes this process persisted; one file
+    * per query tag keeps sibling queries from rewriting each other's. */
+  private val OracleInputDir: String = graft.Tables.workBase
 
   /** Tags already persisted by THIS process: the synthetic input is
     * seed-deterministic, so the write runs once per (session, tag) and

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions injection point (the (c)-tier registration path
   * of SURVEY §7.4 / the north star): lets a session built with
@@ -10,55 +10,17 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   SparkSession.builder().withExtensions(new GraftExtensions)
   *   // or spark.sql.extensions=graft.functions.GraftExtensions
   *
-  * resolve the engine's native functions from SQL text without any per-query
-  * registration call. `GraftFunctions.register` remains the imperative
-  * equivalent for sessions created elsewhere (the driver's own builders).
+  * resolve every native function of [[GraftFunctions.sqlFunctions]] from
+  * SQL text. DataFrame code needs no session setup: the `GraftFunctions`
+  * Column wrappers build their expressions directly.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, name)
-
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("graft_dot"), info("graft_dot"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_dot_long"), info("graft_dot_long"),
-      (exprs: Seq[Expression]) => DotLong(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_sqdist_long"), info("graft_sqdist_long"),
-      (exprs: Seq[Expression]) => SqDistLong(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_minhash_sig"), info("graft_minhash_sig"),
-      (exprs: Seq[Expression]) =>
-        MinHashSig(exprs(0), exprs(1).eval(null).asInstanceOf[Int])))
-    e.injectFunction((FunctionIdentifier("graft_sig_agreement"), info("graft_sig_agreement"),
-      (exprs: Seq[Expression]) => SigAgreement(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_bigram_shingles"), info("graft_bigram_shingles"),
-      (exprs: Seq[Expression]) => BigramShingles(exprs(0))))
-    e.injectFunction((FunctionIdentifier("graft_word_shingles"), info("graft_word_shingles"),
-      (exprs: Seq[Expression]) => WordShingles(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int])))
-    e.injectFunction((FunctionIdentifier("graft_chunk_rows"), info("graft_chunk_rows"),
-      (exprs: Seq[Expression]) => ChunkRows(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int])))
-    e.injectFunction((FunctionIdentifier("graft_cdc_ends"), info("graft_cdc_ends"),
-      (exprs: Seq[Expression]) => CdcBoundaries(exprs(0))))
-    e.injectFunction((FunctionIdentifier("graft_simhash64"), info("graft_simhash64"),
-      (exprs: Seq[Expression]) => SimHash64(exprs(0))))
-    e.injectFunction((FunctionIdentifier("graft_srp_sig"), info("graft_srp_sig"),
-      (exprs: Seq[Expression]) =>
-        SrpSig(exprs(0), exprs(1).eval(null).asInstanceOf[Int])))
-    e.injectFunction((FunctionIdentifier("graft_jaro_winkler"), info("graft_jaro_winkler"),
-      (exprs: Seq[Expression]) => JaroWinklerSim(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_damerau_lev"), info("graft_damerau_lev"),
-      (exprs: Seq[Expression]) => DamerauLev(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_hamming"), info("graft_hamming"),
-      (exprs: Seq[Expression]) => HammingDist(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_topk"), info("graft_topk"),
-      (exprs: Seq[Expression]) => TopKByValue(exprs(0), exprs(1),
-        exprs(2).eval(null).asInstanceOf[Int])))
-    e.injectFunction((FunctionIdentifier("graft_nfc"), info("graft_nfc"),
-      (exprs: Seq[Expression]) => NfcNormalize(exprs(0))))
-    e.injectFunction((FunctionIdentifier("graft_strip_accents"), info("graft_strip_accents"),
-      (exprs: Seq[Expression]) => StripAccents(exprs(0))))
+    GraftFunctions.sqlFunctions.foreach { case (name, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
+    }
     // optimizer rewrite: free length-difference gates ahead of bounded
     // levenshtein predicates (see graft.plans.LevenshteinGuard)
     e.injectOptimizerRule(_ => graft.plans.LevenshteinGuard)

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -70,64 +69,33 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** dot_long(array<long>, array<long>) → long: exact int64 dot product.
-  * The quantized-lattice families (IVF/PQ/graph-ANN/semdedup/k-center)
-  * previously ran `aggregate(zip_with(a, b, (x,y) => x*y), 0L, _+_)` —
-  * interpreted lambda eval at ~1 µs/element, which at √n-cell kNN-build
-  * fanout dominates whole queries (r15 measured the Lloyd assign stages of
-  * q_ann_graph_recall at 8.5 CPU-s each from this alone). Same
-  * left-to-right fold; int64 + and * are exact, so results are
-  * bit-identical to the HOF form and the DuckDB oracle. Codegen'd;
-  * whole-stage span preserved. */
-case class DotLong(left: Expression, right: Expression)
-    extends BinaryExpression {
+/** Exact int64 pairwise fold Σ term(a[i], b[i]) over two long arrays — the
+  * shared body of [[DotLong]] and [[SqDistLong]]. NULL on unequal lengths or
+  * any null element, the semantics of the `aggregate(zip_with(...))` form
+  * these kernels replaced (zip_with pads the shorter side with nulls, and
+  * a null term nulls the sum). Same left-to-right fold; int64 + and * are
+  * exact, so results are bit-identical to the HOF form and the DuckDB
+  * oracle. Codegen'd; whole-stage span preserved. */
+abstract class LongPairFold extends BinaryExpression {
+
+  protected def term(x: Long, y: Long): Long
+
+  protected def termCode(x: String, y: String): String
 
   override def dataType: DataType = LongType
+
+  override def nullable: Boolean = true
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var s = 0L
-    var i = 0
-    while (i < n) { s += a.getLong(i) * b.getLong(i); i += 1 }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("dlN")
-      val i = ctx.freshName("dlI")
-      val acc = ctx.freshName("dlAcc")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) { $acc += $a.getLong($i) * $b.getLong($i); }
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** sqdist_long(array<long>, array<long>) → long: exact int64 squared
-  * euclidean distance, Σ (x−y)² — the assign/argmin kernel of the
-  * integer-Lloyd fits. Same exactness argument as [[DotLong]]. */
-case class SqDistLong(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
+    val n = a.numElements()
+    if (n != b.numElements()) return null
     var s = 0L
     var i = 0
     while (i < n) {
-      val d = a.getLong(i) - b.getLong(i)
-      s += d * d
+      if (a.isNullAt(i) || b.isNullAt(i)) return null
+      s += term(a.getLong(i), b.getLong(i))
       i += 1
     }
     s
@@ -135,20 +103,54 @@ case class SqDistLong(left: Expression, right: Expression)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("sdN")
-      val i = ctx.freshName("sdI")
-      val acc = ctx.freshName("sdAcc")
-      val d = ctx.freshName("sdD")
+      // freshName, NOT literal locals: several kernels can land in ONE
+      // generated function (see DotProduct)
+      val n = ctx.freshName("lfN")
+      val i = ctx.freshName("lfI")
+      val acc = ctx.freshName("lfAcc")
+      val x = ctx.freshName("lfX")
+      val y = ctx.freshName("lfY")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |int $n = $a.numElements();
+         |${ev.isNull} = $n != $b.numElements();
          |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $d = $a.getLong($i) - $b.getLong($i);
-         |  $acc += $d * $d;
+         |for (int $i = 0; !${ev.isNull} && $i < $n; $i++) {
+         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; }
+         |  else {
+         |    long $x = $a.getLong($i);
+         |    long $y = $b.getLong($i);
+         |    $acc += ${termCode(x, y)};
+         |  }
          |}
          |${ev.value} = $acc;
        """.stripMargin
     })
+}
+
+/** dot_long(array<long>, array<long>) → long: exact int64 dot product.
+  * The quantized-lattice families (IVF/PQ/graph-ANN/semdedup/k-center)
+  * previously ran `aggregate(zip_with(a, b, (x,y) => x*y), 0L, _+_)` —
+  * interpreted lambda eval at ~1 µs/element, which at √n-cell kNN-build
+  * fanout dominates whole queries (r15 measured the Lloyd assign stages of
+  * q_ann_graph_recall at 8.5 CPU-s each from this alone). */
+case class DotLong(left: Expression, right: Expression) extends LongPairFold {
+
+  override protected def term(x: Long, y: Long): Long = x * y
+
+  override protected def termCode(x: String, y: String): String = s"$x * $y"
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+/** sqdist_long(array<long>, array<long>) → long: exact int64 squared
+  * euclidean distance, Σ (x−y)² — the assign/argmin kernel of the
+  * integer-Lloyd fits. */
+case class SqDistLong(left: Expression, right: Expression) extends LongPairFold {
+
+  override protected def term(x: Long, y: Long): Long = (x - y) * (x - y)
+
+  override protected def termCode(x: String, y: String): String = s"($x - $y) * ($x - $y)"
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
@@ -445,105 +447,83 @@ case class WinnowFingerprint(child: Expression, k: Int, w: Int)
 }
 
 object GraftFunctions {
-  /** Idempotent per-session registration; call before using the wrappers. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_dot",
-      exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_dot_long",
-      exprs => DotLong(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sqdist_long",
-      exprs => SqDistLong(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_sig",
-      exprs => MinHashSig(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("graft_sig_agreement",
-      exprs => SigAgreement(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_bigram_shingles",
-      exprs => BigramShingles(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_word_shingles",
-      exprs => WordShingles(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("graft_chunk_rows",
-      exprs => ChunkRows(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("graft_cdc_ends",
-      exprs => CdcBoundaries(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash64",
-      exprs => SimHash64(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_srp_sig",
-      exprs => SrpSig(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("graft_jaro_winkler",
-      exprs => JaroWinklerSim(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_damerau_lev",
-      exprs => DamerauLev(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_hamming",
-      exprs => HammingDist(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_topk",
-      exprs => TopKByValue(exprs(0), exprs(1),
-        exprs(2).eval(null).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("graft_winnow",
-      exprs => WinnowFingerprint(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int],
-        exprs(2).eval(null).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("graft_nfc",
-      exprs => NfcNormalize(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_strip_accents",
-      exprs => StripAccents(exprs(0)), "built-in")
-  }
+  import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 
-  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+  private def int(e: Expression): Int = e.eval(null).asInstanceOf[Int]
+
+  /** The one name -> builder table of the native functions. [[GraftExtensions]]
+    * injects every entry, so SQL text resolves each `graft_*` name in an
+    * extensions session; the Column wrappers below build the same
+    * expressions directly and need no session state at all. */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", e => DotProduct(e(0), e(1))),
+    ("graft_dot_long", e => DotLong(e(0), e(1))),
+    ("graft_sqdist_long", e => SqDistLong(e(0), e(1))),
+    ("graft_minhash_sig", e => MinHashSig(e(0), int(e(1)))),
+    ("graft_sig_agreement", e => SigAgreement(e(0), e(1))),
+    ("graft_bigram_shingles", e => BigramShingles(e(0))),
+    ("graft_word_shingles", e => WordShingles(e(0), int(e(1)))),
+    ("graft_chunk_rows", e => ChunkRows(e(0), int(e(1)))),
+    ("graft_cdc_ends", e => CdcBoundaries(e(0))),
+    ("graft_simhash64", e => SimHash64(e(0))),
+    ("graft_srp_sig", e => SrpSig(e(0), int(e(1)))),
+    ("graft_jaro_winkler", e => JaroWinklerSim(e(0), e(1))),
+    ("graft_damerau_lev", e => DamerauLev(e(0), e(1))),
+    ("graft_hamming", e => HammingDist(e(0), e(1))),
+    ("graft_topk", e => TopKByValue(e(0), e(1), int(e(2)))),
+    ("graft_winnow", e => WinnowFingerprint(e(0), int(e(1)), int(e(2)))),
+    ("graft_nfc", e => NfcNormalize(e(0))),
+    ("graft_strip_accents", e => StripAccents(e(0))))
+
+  def dot(a: Column, b: Column): Column =
+    column(DotProduct(expression(a), expression(b)))
 
   def dotLong(a: Column, b: Column): Column =
-    call_function("graft_dot_long", a, b)
+    column(DotLong(expression(a), expression(b)))
 
   def sqDistLong(a: Column, b: Column): Column =
-    call_function("graft_sqdist_long", a, b)
+    column(SqDistLong(expression(a), expression(b)))
 
   def minhashSig(shingles: Column, numHashes: Int): Column =
-    call_function("graft_minhash_sig", shingles,
-      org.apache.spark.sql.functions.lit(numHashes))
+    column(MinHashSig(expression(shingles), numHashes))
 
   def sigAgreement(a: Column, b: Column): Column =
-    call_function("graft_sig_agreement", a, b)
+    column(SigAgreement(expression(a), expression(b)))
 
   def bigramShingles(tokens: Column): Column =
-    call_function("graft_bigram_shingles", tokens)
+    column(BigramShingles(expression(tokens)))
 
   def wordShingles(tokens: Column, k: Int): Column =
-    call_function("graft_word_shingles", tokens,
-      org.apache.spark.sql.functions.lit(k))
+    column(WordShingles(expression(tokens), k))
 
   def chunkRows(text: Column, width: Int): Column =
-    call_function("graft_chunk_rows", text,
-      org.apache.spark.sql.functions.lit(width))
+    column(ChunkRows(expression(text), width))
 
   def cdcEnds(text: Column): Column =
-    call_function("graft_cdc_ends", text)
+    column(CdcBoundaries(expression(text)))
 
   def winnowFingerprint(text: Column, k: Int, w: Int): Column =
-    call_function("graft_winnow", text,
-      org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(w))
+    column(WinnowFingerprint(expression(text), k, w))
 
   def simhash64(shingles: Column): Column =
-    call_function("graft_simhash64", shingles)
+    column(SimHash64(expression(shingles)))
 
   def srpSig(vec: Column, nBits: Int): Column =
-    call_function("graft_srp_sig", vec,
-      org.apache.spark.sql.functions.lit(nBits))
+    column(SrpSig(expression(vec), nBits))
 
   def jaroWinkler(a: Column, b: Column): Column =
-    call_function("graft_jaro_winkler", a, b)
+    column(JaroWinklerSim(expression(a), expression(b)))
 
   def damerauLev(a: Column, b: Column): Column =
-    call_function("graft_damerau_lev", a, b)
+    column(DamerauLev(expression(a), expression(b)))
 
   def hamming(a: Column, b: Column): Column =
-    call_function("graft_hamming", a, b)
+    column(HammingDist(expression(a), expression(b)))
 
   def topK(value: Column, id: Column, k: Int): Column =
-    call_function("graft_topk", value, id,
-      org.apache.spark.sql.functions.lit(k))
+    column(TopKByValue(expression(value), expression(id), k).toAggregateExpression())
+
+  def nfc(text: Column): Column = column(NfcNormalize(expression(text)))
+
+  def stripAccents(text: Column): Column = column(StripAccents(expression(text)))
 }

@@ -161,21 +161,13 @@ object AffineSketch {
       .orderBy(col("id1"), col("id2"))
   }
 
-  /** Per-process parquet workspace (checkout-relative + pid-suffixed, the
-    * ElbQueries discipline — concurrent JVMs never race on part files). */
-  private val workBase: String = {
-    val b = sys.env.getOrElse("GRAFT_ORACLE_INPUT_DIR",
-      s"${sys.props("user.dir")}/target/oracle_inputs")
-    s"$b/p${ProcessHandle.current().pid()}"
-  }
-
   private val candMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
   /** The full banded candidate relation with its signature-agreement
     * estimate (id1 < id2, est_jaccard) — the expensive
     * shingle→signature→banding→verify pipeline computed ONCE per
-    * (process, dir) and persisted to parquet, then shared by its three
+    * (session, dir) and persisted to parquet, then shared by its three
     * consumers: [[minhashAffine]] (est ≥ 0.5 near-dup pairs),
     * [[dedupPr]] (needs BOTH the raw candidate set and the verified set),
     * and [[Curation.clusterSplit]]'s leakage audit. Disk, not
@@ -187,7 +179,7 @@ object AffineSketch {
   def minhashCandEst(s: SparkSession, dir: String): DataFrame =
     candMemo.computeIfAbsent((s, dir), _ => {
       val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val out = s"$workBase/minhash_cand_$safe.parquet"
+      val out = s"${graft.Tables.workDir(s)}/minhash_cand_$safe.parquet"
       val sig = minhashSig(s, dir)
       estJaccard(sig, bandedCand(sig))
         .select(col("id1"), col("id2"), col("est_jaccard"))

@@ -1499,8 +1499,7 @@ object Analytics {
     // pair self-join to a broadcast cascade. The join strategies are now
     // PINNED by explicit hints in [[coCosine]]/[[userRecs]], so accurate
     // stats can no longer re-plan anything — the eager count is pure win
-    // (measured r15: q_user_recs task time 133-180 s -> see
-    // OPTIMIZATION_r15.md; plans byte-identical across runs).
+    // (plans byte-identical across runs).
     bk.count() // eager: up to 5 sibling-stage consumers (see Tables.pinned note)
     bk
   }

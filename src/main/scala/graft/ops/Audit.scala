@@ -402,11 +402,11 @@ object Audit {
           .as("n_error"))
       .filter(col("event_type") =!= "error")
     val kept = work.count()
-    val m = obs.get
+    val m = Tables.observed(obs, "observeAudit")
     import s.implicits._
-    Seq((m("n_rows").asInstanceOf[Long], m("sum_ids").asInstanceOf[Long],
-      m("min_id").asInstanceOf[Long], m("max_id").asInstanceOf[Long],
-      m("n_error").asInstanceOf[Long], kept))
+    Seq((m.getAs[Long]("n_rows"), m.getAs[Long]("sum_ids"),
+      m.getAs[Long]("min_id"), m.getAs[Long]("max_id"),
+      m.getAs[Long]("n_error"), kept))
       .toDF("n_rows", "sum_ids", "min_id", "max_id", "n_error", "n_kept")
   }
 

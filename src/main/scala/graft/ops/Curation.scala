@@ -90,12 +90,13 @@ object Curation {
     * convergence check rides the checkpoint job instead of paying its own
     * action — and its AQE stage-jobs — every round; verified r15 that
     * Observation metrics fire on an eager localCheckpoint in Spark 4.1).
-    * Returns the lineage-cut frame and the metric value (0 on empty). */
-  private def checkpointWithMetric(df: DataFrame,
+    * Returns the lineage-cut frame and the metric value (0 on empty);
+    * `step` names the loop in the error if the metric never arrives. */
+  private def checkpointWithMetric(step: String, df: DataFrame,
       metric: org.apache.spark.sql.Column): (DataFrame, Long) = {
     val obs = org.apache.spark.sql.Observation()
     val out = df.observe(obs, metric.as("m")).localCheckpoint()
-    val v = obs.get("m") match {
+    val v = Tables.observed(obs, step).getAs[Any]("m") match {
       case null => 0L
       case x: Number => x.longValue()
     }
@@ -142,7 +143,7 @@ object Curation {
       // partitioning on the cached blocks) — reverted to the eager form.
       // convergence metric observed ON the checkpoint job (one action per
       // round, not two — see checkpointWithMetric)
-      val (next, ch) = checkpointWithMetric(
+      val (next, ch) = checkpointWithMetric("connectedComponents",
         stepped.join(
           stepped.select(col("id").as("lab1"), col("lab1").as("lab2")), "lab1")
         .select(col("id"), col("old"),
@@ -478,7 +479,7 @@ object Curation {
       // anti-join plan then grows with the round count and the added
       // planning cost measured LARGER than the checkpoint job it saved;
       // reverted to the full-copy checkpoint.)
-      val (next, fs) = checkpointWithMetric(
+      val (next, fs) = checkpointWithMetric("graphBfs",
         frontier
           .join(edges, col("node") === col("u"))
           .select(col("v").as("node"), (col("hops") + 1).as("hops"))
@@ -715,7 +716,7 @@ object Curation {
       val merged = best.union(relaxed)
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
         .localCheckpoint()
-      val (improved, act) = checkpointWithMetric(
+      val (improved, act) = checkpointWithMetric("sssp",
         merged.join(best, Seq("node", "dist"), "left_anti"),
         count(lit(1)))
       active = act
@@ -807,7 +808,7 @@ object Curation {
         .agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("node"))
-      val (next, m) = checkpointWithMetric(
+      val (next, m) = checkpointWithMetric("kCoreOf",
         cur
           .join(surv.select(col("node").as("u")), Seq("u"), "left_semi")
           .join(surv.select(col("node").as("v")), Seq("v"), "left_semi")
@@ -930,19 +931,11 @@ object Curation {
       .distinct()
   }
 
-  /** Per-process parquet workspace (checkout-relative + pid-suffixed, the
-    * ElbQueries/AffineSketch discipline — concurrent JVMs never race). */
-  private val workBase: String = {
-    val b = sys.env.getOrElse("GRAFT_ORACLE_INPUT_DIR",
-      s"${sys.props("user.dir")}/target/oracle_inputs")
-    s"$b/p${ProcessHandle.current().pid()}"
-  }
-
   private val comMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), DataFrame]()
 
   /** The 4-round label-propagation community relation computed ONCE per
-    * (process, dir) and persisted to parquet, then shared by its three
+    * (session, dir) and persisted to parquet, then shared by its three
     * consumers — [[labelPropagation]], [[modularity]], [[louvainMove]] —
     * the [[AffineSketch.minhashCandEst]] shared-derived-relation
     * discipline (disk, not `.persist()`: harnesses clear the cache
@@ -951,7 +944,7 @@ object Curation {
   private def docCommunities(s: SparkSession, dir: String): DataFrame =
     comMemo.computeIfAbsent((s, dir), _ => {
       val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val out = s"$workBase/doc_communities_$safe.parquet"
+      val out = s"${Tables.workDir(s)}/doc_communities_$safe.parquet"
       val d = docs(s, dir).select(col("doc_id"))
       labelPropOf(d.select(col("doc_id").as("node")), docUndirected(s, dir))
         .write.mode("overwrite").parquet(out)
@@ -1283,7 +1276,6 @@ object Curation {
     * candidate set, never corpus²). Fully oracle-checked via
     * list_dot_product. */
   def hybridDedup(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val pairs = graft.ops.TextOps.jaccardPairs(s, dir)
       .select(col("id1"), col("id2"), col("jaccard"))
     val e = Tables(s, dir, "embeddings")

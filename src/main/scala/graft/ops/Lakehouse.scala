@@ -25,13 +25,6 @@ import graft.sources.SnapshotTable
   */
 object Lakehouse {
 
-  /** Per-process work dir, same discipline as StreamQueries.base. */
-  private val base: String = {
-    val b = sys.env.getOrElse("GRAFT_ORACLE_INPUT_DIR",
-      s"${sys.props("user.dir")}/target/oracle_inputs")
-    s"$b/p${ProcessHandle.current().pid()}"
-  }
-
   private val memo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), String]()
 
@@ -68,7 +61,7 @@ object Lakehouse {
     * Returns the table path. */
   private[ops] def buildOnce(s: SparkSession, dir: String): String =
     memo.computeIfAbsent((s, dir), _ => {
-      val table = s"$base/snaptable_${safe(dir)}"
+      val table = s"${Tables.workDir(s)}/snaptable_${safe(dir)}"
       SnapshotTable.transact(s, table, "create") { _ => baseRows(s, dir) }
       SnapshotTable.transact(s, table, "merge-b1") { cur =>
         upsert(cur.get, batch1(s, dir))
@@ -139,7 +132,7 @@ object Lakehouse {
     * SnapshotTableSpec. */
   def snapshotCompact(s: SparkSession, dir: String): DataFrame = {
     val table = compactMemo.computeIfAbsent((s, dir), _ => {
-      val t = s"$base/snapcompact_${safe(dir)}"
+      val t = s"${Tables.workDir(s)}/snapcompact_${safe(dir)}"
       SnapshotTable.transact(s, t, "create") { _ => baseRows(s, dir) }
       SnapshotTable.transact(s, t, "merge-b1") { cur =>
         upsert(cur.get, batch1(s, dir))
@@ -174,7 +167,7 @@ object Lakehouse {
     * [[snapshotPrune]] and [[snapshotIncremental]]. */
   private def prunedTableOnce(s: SparkSession, dir: String): (String, Long) =
     pruneMemo.computeIfAbsent((s, dir), _ => {
-      val t = s"$base/snapprune_${safe(dir)}"
+      val t = s"${Tables.workDir(s)}/snapprune_${safe(dir)}"
       val rows = Tables(s, dir, "orders")
         .select(col("o_orderkey").as("k"), cents("o_totalprice").as("cents"))
       val m = rows.agg(max(col("k"))).head().getLong(0)
@@ -217,7 +210,7 @@ object Lakehouse {
       .select(col("o_orderkey").as("k"), (col("o_orderkey") % 8).as("pt"),
         cents("o_totalprice").as("cents"), lit("base").as("src"))
     val table = mergeMemo.computeIfAbsent((s, dir), _ => {
-      val t = s"$base/snapmerge_${safe(dir)}"
+      val t = s"${Tables.workDir(s)}/snapmerge_${safe(dir)}"
       SnapshotTable.appendPartitioned(s, t, baseRows, "pt")
       val updates = baseRows
         .filter(col("k") % 8 === 2 && col("k") % 3 === 0)
@@ -253,7 +246,7 @@ object Lakehouse {
     * half. */
   def snapshotEvolve(s: SparkSession, dir: String): DataFrame = {
     val table = evolveMemo.computeIfAbsent((s, dir), _ => {
-      val t = s"$base/snapevolve_${safe(dir)}"
+      val t = s"${Tables.workDir(s)}/snapevolve_${safe(dir)}"
       SnapshotTable.append(s, t, baseRows(s, dir))
       SnapshotTable.append(s, t, batch1(s, dir)
         .withColumn("chan",
@@ -310,7 +303,7 @@ object Lakehouse {
       .select(col("o_orderkey").as("k"), (col("o_orderkey") % 8).as("pt"),
         cents("o_totalprice").as("cents"), lit("base").as("src"))
     val table = optMemo.computeIfAbsent((s, dir), _ => {
-      val t = s"$base/snapopt_${safe(dir)}"
+      val t = s"${Tables.workDir(s)}/snapopt_${safe(dir)}"
       SnapshotTable.appendPartitioned(s, t, pbase, "pt")
       val extra = pbase.filter(col("pt").isin(1L, 3L))
         .select((col("k") + 80000000L).as("k"), col("pt"),
@@ -351,7 +344,7 @@ object Lakehouse {
   def snapshotMview(s: SparkSession, dir: String): DataFrame = {
     val (src, _) = prunedTableOnce(s, dir)
     val table = mviewMemo.computeIfAbsent((s, dir), _ => {
-      val t = s"$base/snapmview_${safe(dir)}"
+      val t = s"${Tables.workDir(s)}/snapmview_${safe(dir)}"
       def applyDelta(v: Int): Option[Int] =
         SnapshotTable.transactOnce(s, t, s"mview-v$v", s"mview:$v") { cur =>
           val delta = SnapshotTable.readAdded(s, src, v)
@@ -396,7 +389,7 @@ object Lakehouse {
       .select(col("k"), col("cust"), (col("cents") + 3000).as("cents"),
         lit("r1").as("src"))
     val table = deleteMemo.computeIfAbsent((s, dir), _ => {
-      val t = s"$base/snapdelete_${safe(dir)}"
+      val t = s"${Tables.workDir(s)}/snapdelete_${safe(dir)}"
       SnapshotTable.append(s, t, dbase)
       SnapshotTable.deleteWhere(s, t,
         dbase.filter(col("cust") % 10 === 0).select(col("k")), "k")
@@ -436,7 +429,7 @@ object Lakehouse {
     * re-derives both states purely relationally. */
   def snapshotUpdate(s: SparkSession, dir: String): DataFrame = {
     val table = updateMemo.computeIfAbsent((s, dir), _ => {
-      val t = s"$base/snapupdate_${safe(dir)}"
+      val t = s"${Tables.workDir(s)}/snapupdate_${safe(dir)}"
       SnapshotTable.append(s, t, baseRows(s, dir))
       SnapshotTable.append(s, t, batch1(s, dir))
       SnapshotTable.updateWhere(s, t, "k",
@@ -470,7 +463,7 @@ object Lakehouse {
     * breaks the GATE. */
   def snapshotRestore(s: SparkSession, dir: String): DataFrame = {
     val table = restoreMemo.computeIfAbsent((s, dir), _ => {
-      val t = s"$base/snaprestore_${safe(dir)}"
+      val t = s"${Tables.workDir(s)}/snaprestore_${safe(dir)}"
       SnapshotTable.transact(s, t, "create") { _ => baseRows(s, dir) }
       SnapshotTable.transact(s, t, "merge-b1") { cur =>
         upsert(cur.get, batch1(s, dir))

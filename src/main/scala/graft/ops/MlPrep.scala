@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions
+
 /** ML-prep operators a large-scale training pipeline runs between raw text
   * and the trainer, end to end: dedup signals (exact long-substring
   * duplication — the char-level signal of Lee et al. 2022, "Deduplicating
@@ -225,15 +227,13 @@ object MlPrep {
     * java.text.Normalizer output against DuckDB's utf8proc per document —
     * a flag-free oracle on the strings themselves. */
   def textNormalize(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val acc = replace(replace(replace(col("text"),
       lit("a"), lit("\u00e1")), lit("e"), lit("\u00e8")), lit("o"), lit("\u00f6"))
     val dec = replace(col("text"), lit("a"), lit("a\u0301"))
     docs(s, dir).select(col("doc_id"),
-      substring(md5(call_function("graft_strip_accents", acc)), 1, 16)
-        .as("strip_md5"),
-      substring(md5(call_function("graft_nfc", dec)), 1, 16).as("nfc_md5"),
-      length(call_function("graft_nfc", dec)).as("n_nfc"))
+      substring(md5(GraftFunctions.stripAccents(acc)), 1, 16).as("strip_md5"),
+      substring(md5(GraftFunctions.nfc(dec)), 1, 16).as("nfc_md5"),
+      length(GraftFunctions.nfc(dec)).as("n_nfc"))
       .orderBy("doc_id")
   }
 
@@ -580,7 +580,6 @@ object MlPrep {
     * pass) then broadcast-centroid argmin assignment. Feeds both
     * [[evalMetrics]] and [[evalSummary]]. */
   private def centroidPred(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s) // for sqDistLong below
     val qs = embeddings(s, dir).select(col("vec_id"), col("label"), expr(
       s"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * $EvalScale) AS BIGINT))")
       .as("q"))
@@ -592,8 +591,7 @@ object MlPrep {
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
         x => x.getField("m")).as("m"))
     qs.crossJoin(broadcast(cent))
-      .withColumn("dist",
-        graft.functions.GraftFunctions.sqDistLong(col("q"), col("m")))
+      .withColumn("dist", GraftFunctions.sqDistLong(col("q"), col("m")))
       .groupBy("vec_id")
       .agg(min(struct(col("dist"), col("cl"))).as("best"),
         first(col("label")).as("label"))

@@ -460,15 +460,6 @@ object Relational {
       .orderBy(col("word"))
   }
 
-  /** Per-process oracle-input base (same contract as
-    * [[graft.elb.ElbQueries]]'s: checkout-derived, pid-suffixed so
-    * concurrent bench/verify JVMs never race on part files). */
-  private val OracleInputDir: String = {
-    val base = sys.env.getOrElse("GRAFT_ORACLE_INPUT_DIR",
-      s"${sys.props("user.dir")}/target/oracle_inputs")
-    s"$base/p${ProcessHandle.current().pid()}"
-  }
-
   /** (session, dir)s whose evolved-orders fixture this process has
     * written — computeIfAbsent-style guard via a concurrent set; the
     * fixture is deterministic so later constructions reuse the bytes. */
@@ -477,7 +468,7 @@ object Relational {
 
   private def evolvedOrdersPath(s: SparkSession, dir: String): String = {
     val safe = dir.replaceAll("[^A-Za-z0-9]+", "_")
-    val out = s"$OracleInputDir/evolved_orders_$safe"
+    val out = s"${Tables.workDir(s)}/evolved_orders_$safe"
     if (evolvedWritten.add((s, dir))) {
       val o = t(s, dir, "orders")
       // batch=1 predates the column; batch=2 added o_orderpriority

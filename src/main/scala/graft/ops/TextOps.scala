@@ -29,7 +29,6 @@ object TextOps {
     * and to the oracle's DuckDB list_distinct(list_transform(...)), but one
     * JVM loop per doc instead of interpreted per-element lambdas. */
   private[ops] def withShingles(df: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("tokens", split(col("text"), " "))
       .withColumn("shingles",
         graft.functions.GraftFunctions.bigramShingles(col("tokens")))
@@ -593,7 +592,6 @@ object TextOps {
     * round-6 range for any real document. */
   def jaccardPrefix(s: SparkSession, dir: String): DataFrame = {
     val thr = 0.25
-    graft.functions.GraftFunctions.register(s)
     // 5-WORD shingles (Broder'97 w-shingling), not bigrams: prefix
     // filtering's effectiveness is governed by the shingle space's tail —
     // the fixture's bigram space is ~10³ hub shingles (every doc shares
@@ -684,7 +682,6 @@ object TextOps {
   /** per-doc 32-hash MinHash signatures — shared by [[minhashCandidates]]
     * and the deterministic pins in TextVectorSpec. */
   private[graft] def minhashSigs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     withShingles(docs(s, dir))
       .filter(size(col("shingles")) > 0)
       .select(col("doc_id"),
@@ -745,7 +742,6 @@ object TextOps {
     * sig1^sig2 is zero; recall vs exact Jaccard near-dups is pinned in
     * TextVectorSpec. Hash-based → no DuckDB oracle (rows-only). */
   def simhashPairs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val nRot = 8        // rotations, 64/nRot = 8-bit steps
     val prefixBits = 16 // bucket key width per rotation
     // persisted: the shingle+SimHash pipeline feeds both join sides below
@@ -843,7 +839,6 @@ object TextOps {
     * rows-only oracle; the winnowing guarantee (shared substrings ⇒ shared
     * fingerprints) is pinned in TextVectorSpec. */
   def winnowFingerprints(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     docs(s, dir)
       .select(col("doc_id"),
         graft.functions.GraftFunctions.winnowFingerprint(col("text"), 8, 4).as("fp"))
@@ -905,7 +900,6 @@ object TextOps {
     * PlanSpec pins that the plan is a Generate over ChunkRows with no
     * sequence/explode projection. */
   def chunkGen(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     docs(s, dir)
       .select(col("doc_id"),
         graft.functions.GraftFunctions.chunkRows(col("text"), 120))
@@ -1977,7 +1971,6 @@ object TextOps {
     * three kernels' semantics (boost-gated Winkler bonus; unrestricted
     * transpositions — see StringDistance.scala probes). */
   def fuzzyNameMatch(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import graft.functions.GraftFunctions._
     val sup = Tables(s, dir, "supplier")
       .select(col("s_suppkey"), col("s_name"),
@@ -2034,7 +2027,6 @@ object TextOps {
     * tie-break exactly), different — and at 100 TB strictly better —
     * plan. */
   def topkAgg(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     docs(s, dir)
       .groupBy(col("lang"))
       .agg(graft.functions.GraftFunctions.topK(
@@ -2060,7 +2052,6 @@ object TextOps {
     * (CdcParams.oracleHashSql — the languageId generated-twin pattern), so
     * chunk fingerprints themselves hash-match, not just counts. */
   def cdcDupChunks(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val w = Window.partitionBy(col("doc_id")).orderBy(col("e"))
     docs(s, dir)
       .select(col("doc_id"), col("text"),

@@ -26,10 +26,8 @@ import graft.functions.GraftFunctions
   */
 object VectorOps {
 
-  private def emb(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
+  private def emb(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "embeddings")
-  }
 
   private def dot(a: Column, b: Column): Column = GraftFunctions.dot(a, b)
 

@@ -29,14 +29,6 @@ case class UserRunOut(user_id: Long, n_events: Long, sum_ids: Long,
   */
 object StreamQueries {
 
-  /** Per-process work dir (same discipline as ElbQueries.OracleInputDir:
-    * checkout-relative, pid-suffixed so concurrent JVMs never race). */
-  private val base: String = {
-    val b = sys.env.getOrElse("GRAFT_ORACLE_INPUT_DIR",
-      s"${sys.props("user.dir")}/target/oracle_inputs")
-    s"$b/p${ProcessHandle.current().pid()}"
-  }
-
   /** Run-once memo: (session, fixture dir, query tag) → persisted output
     * path. `computeIfAbsent` gives three properties the previous
     * add-to-a-Set flag lacked (ADVICE r11): concurrent callers BLOCK until
@@ -76,15 +68,9 @@ object StreamQueries {
     * unchanged oracle hashes prove; at production volume the knob goes
     * the other way (more partitions per state size), which is exactly the
     * point: it is a per-stream sizing decision, not a session constant. */
-  private def withStreamPartitions[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "2"))
-    try body finally prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None => s.conf.unset(key)
-    }
-  }
+  private def withStreamPartitions[T](s: SparkSession)(body: => T): T =
+    graft.Tables.withConf(s, "spark.sql.shuffle.partitions" ->
+      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "2"))(body)
 
   /** Runs `body` at most once per (session, dir, tag), handing it a
     * dir-keyed path prefix for its replay/checkpoint/output files; returns
@@ -93,7 +79,7 @@ object StreamQueries {
   private def runOnce(s: SparkSession, dir: String, tag: String)(
       body: String => String): String =
     memo.computeIfAbsent((s, dir, tag),
-      _ => withStreamPartitions(s) { body(s"$base/${tag}_${safe(dir)}") })
+      _ => withStreamPartitions(s) { body(s"${graft.Tables.workDir(s)}/${tag}_${safe(dir)}") })
 
   /** Stamps the part files a replay stage just wrote with a strictly
     * increasing synthetic mtime. FileStreamSource orders files by

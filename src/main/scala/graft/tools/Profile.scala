@@ -68,7 +68,6 @@ object Profile {
 
     // warm
     graft.Tables(spark, sfDir, "documents").count()
-    graft.functions.GraftFunctions.register(spark)
 
     // --- simhash bucket-skew diagnosis
     val nRot = 8

@@ -2,18 +2,22 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.StructType
 
-/** The two `private[sql]` hops the engine needs: turning a custom
+/** The `private[sql]` hops the engine needs: turning a custom
   * [[LogicalPlan]] (graft.plans.AsOfJoin) into a user-facing DataFrame,
-  * and minting the `isStreaming = true` DataFrame a DSv1 streaming
+  * minting the `isStreaming = true` DataFrame a DSv1 streaming
   * `Source.getBatch` must return (graft.sources.SnapshotStreamSource —
   * the same `internalCreateDataFrame` hop every DSv1 source inside
-  * Spark takes). Placing these forwarders inside `org.apache.spark.sql`
-  * is the established way third-party Spark libraries expose custom
-  * operators and sources (no other Spark internals are touched here;
-  * everything else lives under `graft.*`).
+  * Spark takes), and converting between a [[Column]] and its Catalyst
+  * [[Expression]] so graft.functions.GraftFunctions can wrap its native
+  * expressions without a function-name registry. Placing these
+  * forwarders inside `org.apache.spark.sql` is the established way
+  * third-party Spark libraries expose custom operators and sources (no
+  * other Spark internals are touched here; everything else lives under
+  * `graft.*`).
   */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -27,4 +31,8 @@ object GraftSqlBridge {
       schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming = true)
+
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 }

@@ -45,9 +45,12 @@ class EntrySpec extends SparkSpec {
   // query construction is not free (ScaledRank-based queries run eager
   // boundary-stats jobs and persist() RDDs while building), so a second
   // full construction sweep would double that cost and accumulate cached
-  // RDDs (ADVICE r8).
+  // RDDs (ADVICE r8). Each query gets its own new session, whose function
+  // registry and temp views start empty, so a query that only resolves
+  // after another one ran (the solo-run failure mode) fails here.
   private lazy val built: Seq[(String, org.apache.spark.sql.DataFrame)] =
-    SparkEntry.queries.toSeq.map { case (name, fn) => name -> fn(spark, sf001) }
+    SparkEntry.queries.toSeq.map { case (name, fn) =>
+      name -> fn(spark.newSession(), sf001) }
 
   test("every query runs at sf0.001 with columns and rows") {
     val empties = Seq("q_jaccard_pairs", "q_cosine_pairs",

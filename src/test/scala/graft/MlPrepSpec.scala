@@ -105,15 +105,6 @@ class MlPrepSpec extends SparkSpec {
     assert(TextNormalizers.stripAccents(u("no accents")).toString == "no accents")
   }
 
-  test("normalization expressions resolve from SQL via extensions registry") {
-    graft.functions.GraftFunctions.register(spark)
-    val r = spark.sql(
-      "SELECT graft_nfc('a\u0301') AS n, graft_strip_accents('\u00e4b') AS s")
-      .head()
-    assert(r.getString(0) == "\u00e1")
-    assert(r.getString(1) == "ab")
-  }
-
   test("substring dedup only reports cross-document grams") {
     val out = MlPrep.substringDedup(spark, sf001).collect()
     assert(out.nonEmpty)

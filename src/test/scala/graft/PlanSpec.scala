@@ -72,7 +72,6 @@ class PlanSpec extends SparkSpec {
     // end-to-end through the SQL surface: cos(v, v) == 1
     import org.apache.spark.sql.functions._
     import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     val df = spark.range(4).select(
       expr("transform(sequence(0, 7), x -> cast(x + id as double))").as("v"))
     val proj = df.select(

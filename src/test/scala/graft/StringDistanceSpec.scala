@@ -54,7 +54,6 @@ class StringDistanceSpec extends SparkSpec {
   }
 
   test("expressions evaluate through the codegen path on a DataFrame") {
-    GraftFunctions.register(spark)
     val rows = Seq(("martha", "marhta"), ("CA", "ABC"), ("abcd", "abce"))
       .toDF("a", "b")
       .select(
@@ -73,7 +72,6 @@ class StringDistanceSpec extends SparkSpec {
   }
 
   test("chunk generator: short, exact-multiple, and empty inputs") {
-    GraftFunctions.register(spark)
     val rows = Seq((1L, "a" * 250), (2L, "b" * 240), (3L, "short"), (4L, ""))
       .toDF("id", "t")
       .select(col("id"), GraftFunctions.chunkRows(col("t"), 120))
@@ -147,7 +145,6 @@ class StringDistanceSpec extends SparkSpec {
   }
 
   test("cdc chunking is shift-robust where the fixed grid is not") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(42)
     val base = (1 to 600).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
     val shifted = "xyzq" + base // 4-char insertion at the front
@@ -177,7 +174,6 @@ class StringDistanceSpec extends SparkSpec {
   }
 
   test("topk heap aggregate matches the window twin under ties and partial merge") {
-    GraftFunctions.register(spark)
     // adversarial fixture: heavy value ties (every value repeated across
     // ids), spread over 8 partitions so the serialize/merge path runs,
     // plus a group smaller than k

@@ -322,7 +322,6 @@ class TextVectorSpec extends SparkSpec {
 
   test("winnowing fingerprints: edit-robust overlap, shared-substring guarantee") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val base = "the quick brown fox jumps over the lazy dog while the cat watches from the warm windowsill every single evening"
     val edited = base.replace("jumps", "leaps") // one-word edit mid-text
     val other = "completely different content about distributed query engines and shuffle partitioning strategies at scale"
