@@ -1,9 +1,14 @@
 package graft.stream
 
+import scala.concurrent.duration._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.LongType
+
+import graft.sources.SnapshotTable
 
 /** Typed rows for [[StreamQueries.streamNearDup]]'s LSH-bucket state. */
 case class BandRow(doc_id: Long, band: Int, bkey: String)
@@ -16,70 +21,91 @@ case class UserRunOut(user_id: Long, n_events: Long, sum_ids: Long,
     first_us: Long, last_us: Long)
 
 /** The §2.10 streaming family's entry into the driver's rows+schema+hash
-  * CORRECTNESS gate (previously spec-only by declared design): a query that
-  * runs the streaming sessionizer through the FULL Structured-Streaming
-  * runtime — file micro-batch source → session_window state store →
-  * foreachBatch sink — as a one-shot replay (Trigger.AvailableNow) of the
-  * events table, persists the result, and is hash-compared to a DuckDB
-  * oracle that re-derives the same sessions from `events` directly. Any
-  * drift between the streaming execution mode and the batch/independent
-  * semantics (state merge, window coalescing, output timing) breaks the
-  * hash — the reference's continuous-arrival presumption
-  * (/root/reference/README.md:19) proven equivalent across execution modes.
+  * CORRECTNESS gate: each query runs through the FULL Structured-Streaming
+  * runtime — micro-batch source → state store → foreachBatch sink — as a
+  * one-shot replay (Trigger.AvailableNow) of the fixtures, persists the
+  * result, and is hash-compared to a DuckDB oracle that re-derives the same
+  * relation from the tables directly. Any drift between the streaming
+  * execution mode and the batch/independent semantics (state merge, window
+  * coalescing, output timing) breaks the hash — the challenge's
+  * continuous-arrival presumption proven equivalent across execution
+  * modes.
+  *
+  * Every replay takes one path: [[stage]] writes the builder's stages in
+  * arrival order and opens them as a file stream, [[drain]] runs the query
+  * to completion within [[DrainWait]], and a shared sink
+  * ([[overwriteLast]], [[append]], [[appendTagged]]) persists what it
+  * emits. Each builder keeps only its query logic and its stage split.
   */
 object StreamQueries {
 
-  /** Run-once memo: (session, fixture dir, query tag) → persisted output
-    * path. `computeIfAbsent` gives three properties the previous
-    * add-to-a-Set flag lacked (ADVICE r11): concurrent callers BLOCK until
-    * the first writer finishes (no read-before-write race), a failed
-    * replay records NO mapping (retries re-run instead of reading a
+  /** The work files of one replay, all named from one dir-keyed prefix. */
+  private case class Work(tag: String, prefix: String) {
+    def file(suffix: String): String = s"${prefix}_$suffix"
+    def replay: String = file("replay")
+    def chk: String = file("chk")
+    def table: String = file("table")
+    def out: String = s"$prefix.parquet"
+  }
+
+  /** Run-once memo: (session, fixture dir, query tag) → the replay's work
+    * files. `computeIfAbsent` makes concurrent callers BLOCK until the
+    * first writer finishes (no read-before-write race), records NO mapping
+    * for a failed replay (retries re-run instead of reading a
     * missing/partial parquet), and because the work paths embed the
-    * sanitized dir, running the same query against two fixture dirs in one
-    * JVM (the growth harness's batch pattern) never cross-contaminates —
-    * the same discipline as Curation.docCommunities and
-    * AffineSketch.minhashCandEst. */
+    * sanitized dir, the same query run against two fixture dirs in one JVM
+    * never cross-contaminates — the same discipline as
+    * Curation.docCommunities and AffineSketch.minhashCandEst. */
   private val memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), String]()
+    (SparkSession, String, String), Work]()
 
   private def safe(dir: String): String =
     dir.replaceAll("[^A-Za-z0-9._-]", "_")
 
-  /** Scopes a reduced shuffle/state partition count around a gate
-    * replay. At the session default (32), every micro-batch pays 32
-    * state-store instances PER stateful operator of checkpoint IO for
-    * partitions holding a few hundred rows — pure machinery on these
-    * tens-of-thousands-row replays. Batch queries get this right-sizing
-    * from AQE; a stream's state partition count is fixed at first start,
-    * so it must be chosen — 4 keeps genuine multi-partition semantics
-    * coverage (cross-partition shuffles, parallel state commits) at an
-    * eighth of the IO (r12 ran 8; the r12 verdict's machinery-diet task
-    * re-measured the knob — state-store instance setup/commit dominates
-    * these replays, not state volume — and every oracle hash is
-    * unchanged; BASELINE.md records the before/after subtotals). r15
-    * re-measured 4 vs 2 across the whole 21-query family: summed task
-    * time halves again (stream-stream joins keep FOUR state stores per
-    * partition per side, so each partition removed saves 8+ instance
-    * setups/commits per micro-batch; q_stream_join 27 -> 2.3 task-s) and
-    * family wall fell ~20%, with every oracle hash unchanged. 2 is the
-    * floor that still exercises genuine multi-partition semantics
-    * (cross-partition shuffles, parallel state commits). Results are
-    * partitioning-independent (exact aggregates/joins), which the
-    * unchanged oracle hashes prove; at production volume the knob goes
-    * the other way (more partitions per state size), which is exactly the
-    * point: it is a per-stream sizing decision, not a session constant. */
-  private def withStreamPartitions[T](s: SparkSession)(body: => T): T =
-    graft.Tables.withConf(s, "spark.sql.shuffle.partitions" ->
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "2"))(body)
+  /** Shuffle/state partitions of every replay. A stream's state partition
+    * count is fixed at its first start, so unlike a batch query it cannot
+    * be right-sized by AQE and must be chosen; 2 is the floor that keeps
+    * multi-partition semantics (cross-partition shuffles, parallel state
+    * commits). Results are partitioning-independent. */
+  private val StreamPartitions = "2"
 
-  /** Runs `body` at most once per (session, dir, tag), handing it a
-    * dir-keyed path prefix for its replay/checkpoint/output files; returns
-    * the output path `body` yields (conventionally `$prefix.parquet`).
-    * The body runs under [[withStreamPartitions]]. */
+  /** The longest a replay may take to drain before it is stopped and
+    * reported as failed. */
+  private val DrainWait = 10.minutes
+
+  /** transformWithState runs only on the RocksDB state store; a query reads
+    * the provider when it starts. */
+  private val RocksDB = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Runs `body` at most once per (session, dir, tag), under
+    * [[StreamPartitions]], and returns the work files it wrote. */
   private def runOnce(s: SparkSession, dir: String, tag: String)(
-      body: String => String): String =
-    memo.computeIfAbsent((s, dir, tag),
-      _ => withStreamPartitions(s) { body(s"${graft.Tables.workDir(s)}/${tag}_${safe(dir)}") })
+      body: Work => Unit): Work =
+    memo.computeIfAbsent((s, dir, tag), _ => {
+      val w = Work(tag, s"${graft.Tables.workDir(s)}/${tag}_${safe(dir)}")
+      graft.Tables.withConf(s,
+        "spark.sql.shuffle.partitions" -> StreamPartitions)(body(w))
+      w
+    })
+
+  /** Writes `stages` to the replay dir in arrival order, one file each,
+    * and returns a factory of file streams over them that read one stage
+    * per micro-batch, with the staged schema (the file source makes every
+    * column nullable). Each call of the factory opens a new source
+    * instance: the two sides of a stream–stream join need one each. */
+  private def stage(s: SparkSession, w: Work, stages: DataFrame*): () => DataFrame = {
+    stages.zipWithIndex.foreach { case (df, k) => writeStage(w, k, df) }
+    val schema = stages.head.schema
+    () => s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(w.replay)
+  }
+
+  /** Writes stage `k` of a replay as one file; stage 0 replaces any
+    * earlier replay. */
+  private def writeStage(w: Work, k: Int, df: DataFrame): Unit = {
+    df.coalesce(1).write.mode(if (k == 0) "overwrite" else "append").parquet(w.replay)
+    stampStage(w.replay, k)
+  }
 
   /** Stamps the part files a replay stage just wrote with a strictly
     * increasing synthetic mtime. FileStreamSource orders files by
@@ -97,6 +123,70 @@ object StreamQueries {
       f.setLastModified(t)
   }
 
+  /** `ev` in three stages by `event_id mod 3`: arrival out of time order. */
+  private def idThirds(ev: DataFrame): Seq[DataFrame] =
+    (0 to 2).map(k => ev.filter(col("event_id") % 3 === k))
+
+  /** `ev` cut into three equal event-time slices, oldest first: each
+    * stage's rows are strictly newer than everything before it. */
+  private def timeThirds(ev: DataFrame): Seq[DataFrame] = {
+    val Array(loUs, hiUs) = ev
+      .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
+      .head().toSeq.map(_.asInstanceOf[Long]).toArray
+    val width = (hiUs - loUs) / 3L + 1L
+    val sliced = ev.withColumn("sl",
+      least(lit(2L), expr(s"(unix_micros(ts) - ${loUs}L) div ${width}L")))
+    (0 to 2).map(i => sliced.filter(col("sl") === i).drop("sl"))
+  }
+
+  /** Starts `stream` as a one-shot replay of everything available into
+    * `sink`. It starts on the calling thread, so its micro-batches inherit
+    * the caller's local properties. */
+  private def start(stream: DataFrame, mode: String, w: Work)(
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", w.chk)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(sink)
+      .start()
+
+  /** [[start]], then wait for the replay to finish. */
+  private def drain(stream: DataFrame, mode: String, w: Work)(
+      sink: (DataFrame, Long) => Unit): Unit =
+    await(start(stream, mode, w)(sink), w)
+
+  /** Waits at most [[DrainWait]] for `q` to end, rethrowing its failure. */
+  private def await(q: StreamingQuery, w: Work): Unit =
+    if (!q.awaitTermination(DrainWait.toMillis)) timedOut(q, w)
+
+  private def timedOut(q: StreamingQuery, w: Work): Nothing = {
+    q.stop()
+    throw new IllegalStateException(s"${w.tag}: stream did not drain within $DrainWait")
+  }
+
+  /** Complete-mode sink: every batch is the whole result, so the last
+    * overwrite stands. */
+  private def overwriteLast(w: Work)(batch: DataFrame, bid: Long): Unit =
+    batch.coalesce(1).write.mode("overwrite").parquet(w.out)
+
+  private def append(w: Work)(batch: DataFrame, bid: Long): Unit =
+    batch.write.mode("append").parquet(w.out)
+
+  /** Update-mode sink: each emission is tagged with its micro-batch id, so
+    * [[lastVersion]] can rebuild the final state. */
+  private def appendTagged(w: Work)(batch: DataFrame, bid: Long): Unit =
+    batch.withColumn("batch_id", lit(bid)).write.mode("append").parquet(w.out)
+
+  /** The last emitted version of each `keys` group of an [[appendTagged]]
+    * output. */
+  private def lastVersion(s: SparkSession, w: Work, keys: String*): DataFrame =
+    s.read.parquet(w.out)
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(col("batch_id").desc)))
+      .filter(col("rn") === 1)
+      .drop("rn", "batch_id")
+
   /** Streaming 15-min session_window sessionization of the events replay.
     *
     * Complete output mode: a FINITE replay's final micro-batch rewrites
@@ -111,19 +201,10 @@ object StreamQueries {
     * streaming aggregation does not support; item sets here are bounded by
     * the event-type alphabet, never corpus-proportional. */
   def streamSessionize(s: SparkSession, dir: String): DataFrame = {
-    val out = runOnce(s, dir, "stream_sessions") { p =>
-      val out = s"$p.parquet"
-      val replay = s"${p}_replay"
-      val chk = s"${p}_chk"
-      graft.Tables(s, dir, "events")
+    val w = runOnce(s, dir, "stream_sessions") { w =>
+      val ev = graft.Tables(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_type"))
-        .write.mode("overwrite").parquet(replay)
-      val src = s.readStream
-        .schema(StructType(Seq(
-          StructField("user_id", LongType),
-          StructField("ts", TimestampType),
-          StructField("event_type", StringType))))
-        .parquet(replay)
+      val src = stage(s, w, ev)()
       val sess = src
         .groupBy(col("user_id"), session_window(col("ts"), "15 minutes"))
         .agg(
@@ -133,18 +214,9 @@ object StreamQueries {
           size(collect_set(col("event_type"))).cast("long").as("unique_types"))
         .select(col("user_id"), col("session_start_us"),
           col("session_end_us"), col("hit_count"), col("unique_types"))
-      val q = sess.writeStream
-        .outputMode("complete")
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.coalesce(1).write.mode("overwrite").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-      out
+      drain(sess, "complete", w)(overwriteLast(w))
     }
-    s.read.parquet(out).orderBy(col("user_id"), col("session_start_us"))
+    s.read.parquet(w.out).orderBy(col("user_id"), col("session_start_us"))
   }
 
   /** Streaming enrichment: stream–static inner join (the OTHER core
@@ -159,22 +231,13 @@ object StreamQueries {
     * At scale the static side is the classic broadcast dim; the stream
     * side shuffles once on the (nation, window, type) grain. */
   def streamEnrich(s: SparkSession, dir: String): DataFrame = {
-    val out = runOnce(s, dir, "stream_enrich") { p =>
-      val out = s"$p.parquet"
-      val replay = s"${p}_replay"
-      val chk = s"${p}_chk"
-      graft.Tables(s, dir, "events")
+    val w = runOnce(s, dir, "stream_enrich") { w =>
+      val ev = graft.Tables(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_type"))
-        .write.mode("overwrite").parquet(replay)
+      val src = stage(s, w, ev)()
       val dim = graft.Tables(s, dir, "customer")
         .select(col("c_custkey").as("user_id"),
           col("c_nationkey").cast("long").as("nation"))
-      val src = s.readStream
-        .schema(StructType(Seq(
-          StructField("user_id", LongType),
-          StructField("ts", TimestampType),
-          StructField("event_type", StringType))))
-        .parquet(replay)
       val agg = src.join(dim, "user_id")
         .groupBy(col("nation"), window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
@@ -182,24 +245,15 @@ object StreamQueries {
           max(unix_micros(col("ts"))).as("last_us"))
         .select(col("nation"), unix_micros(col("window.start")).as("window_us"),
           col("event_type"), col("n_events"), col("first_us"), col("last_us"))
-      val q = agg.writeStream
-        .outputMode("complete")
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.coalesce(1).write.mode("overwrite").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-      out
+      drain(agg, "complete", w)(overwriteLast(w))
     }
-    s.read.parquet(out)
+    s.read.parquet(w.out)
       .orderBy(col("nation"), col("window_us"), col("event_type"))
   }
 
   /** Streaming exactly-once ingestion dedup: at-least-once delivery (every
-    * third event delivered TWICE, the second copy in a separate file so
-    * `maxFilesPerTrigger=1` lands it in a LATER micro-batch) pushed through
+    * third event delivered TWICE, the second copy in a separate stage so
+    * it lands in a LATER micro-batch) pushed through
     * `dropDuplicates(event_id)`'s key state store in append mode — each key
     * is emitted exactly once across ALL micro-batches, so the union of the
     * per-batch appends is the duplicate-free relation regardless of batch
@@ -214,39 +268,15 @@ object StreamQueries {
     * events table (dedup must restore it exactly). Unbounded key state is
     * the documented bounded-replay trade: on an unbounded stream the same
     * query runs `dropDuplicatesWithinWatermark` with state eviction
-    * ([[StreamSessions]] spec family). */
+    * ([[streamDedupWm]]). */
   def streamDedup(s: SparkSession, dir: String): DataFrame = {
-    val out = runOnce(s, dir, "stream_dedup") { p =>
-      val out = s"$p.parquet"
-      val replay = s"${p}_replay"
-      val chk = s"${p}_chk"
+    val w = runOnce(s, dir, "stream_dedup") { w =>
       val ev = graft.Tables(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-      ev.coalesce(1).write.mode("overwrite").parquet(replay)
-      stampStage(replay, 0)
-      ev.filter(col("event_id") % 3 === 0)
-        .coalesce(1).write.mode("append").parquet(replay)
-      stampStage(replay, 1)
-      val src = s.readStream
-        .schema(StructType(Seq(
-          StructField("event_id", LongType),
-          StructField("user_id", LongType),
-          StructField("ts", TimestampType),
-          StructField("event_type", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
-      val q = src.dropDuplicates("event_id").writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-      out
+      val src = stage(s, w, ev, ev.filter(col("event_id") % 3 === 0))()
+      drain(src.dropDuplicates("event_id"), "append", w)(append(w))
     }
-    s.read.parquet(out)
+    s.read.parquet(w.out)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("event_id")).as("sum_ids"),
@@ -257,45 +287,29 @@ object StreamQueries {
   }
 
   /** Stream–stream interval inner join through the real join state store:
-    * views and purchases arrive in SEPARATE micro-batches (views file
-    * written first, purchases second, `maxFilesPerTrigger=1`), so every
-    * emitted pair requires the view side to have been buffered in join
-    * state from batch 0 and matched by a purchase arriving in batch 1 —
-    * the cross-batch buffering IS the operator. Both sides carry
-    * watermarks (45 days, beyond the 30-day data span, so no state row is
-    * evicted and no input is late — the bounded-replay determinism trade,
-    * same discipline as [[streamDedup]]'s unbounded key state); on an
-    * unbounded stream the identical plan evicts buffered rows once the
-    * 6-hour join range falls behind the watermark. Inner joins emit each
-    * matched pair exactly once regardless of batch slicing, so the
-    * append-mode union is the full interval join, hash-comparable to a
-    * DuckDB self-join over `events`. */
+    * views and purchases arrive in SEPARATE micro-batches (views staged
+    * first, purchases second), so every emitted pair requires the view
+    * side to have been buffered in join state from batch 0 and matched by
+    * a purchase arriving in batch 1 — the cross-batch buffering IS the
+    * operator. Both sides carry watermarks (45 days, beyond the 30-day
+    * data span, so no state row is evicted and no input is late — the
+    * bounded-replay determinism trade, same discipline as
+    * [[streamDedup]]'s unbounded key state); on an unbounded stream the
+    * identical plan evicts buffered rows once the 6-hour join range falls
+    * behind the watermark. Inner joins emit each matched pair exactly once
+    * regardless of batch slicing, so the append-mode union is the full
+    * interval join, hash-comparable to a DuckDB self-join over `events`. */
   def streamJoin(s: SparkSession, dir: String): DataFrame = {
-    val out = runOnce(s, dir, "stream_join") { p =>
-      val out = s"$p.parquet"
-      val replay = s"${p}_replay"
-      val chk = s"${p}_chk"
+    val w = runOnce(s, dir, "stream_join") { w =>
       val ev = graft.Tables(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-      ev.filter(col("event_type") === "view")
-        .coalesce(1).write.mode("overwrite").parquet(replay)
-      stampStage(replay, 0)
-      ev.filter(col("event_type") === "purchase")
-        .coalesce(1).write.mode("append").parquet(replay)
-      stampStage(replay, 1)
-      def src = s.readStream
-        .schema(StructType(Seq(
-          StructField("event_id", LongType),
-          StructField("user_id", LongType),
-          StructField("ts", TimestampType),
-          StructField("event_type", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
-      val views = src.filter(col("event_type") === "view")
+      val src = stage(s, w, ev.filter(col("event_type") === "view"),
+        ev.filter(col("event_type") === "purchase"))
+      val views = src().filter(col("event_type") === "view")
         .select(col("event_id").as("view_id"), col("user_id"),
           col("ts").as("view_ts"))
         .withWatermark("view_ts", "45 days")
-      val buys = src.filter(col("event_type") === "purchase")
+      val buys = src().filter(col("event_type") === "purchase")
         .select(col("event_id").as("buy_id"), col("user_id").as("buy_user"),
           col("ts").as("buy_ts"))
         .withWatermark("buy_ts", "45 days")
@@ -306,18 +320,9 @@ object StreamQueries {
         .select(col("user_id"), col("view_id"), col("buy_id"),
           unix_micros(col("view_ts")).as("view_us"),
           unix_micros(col("buy_ts")).as("buy_us"))
-      val q = pairs.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-      out
+      drain(pairs, "append", w)(append(w))
     }
-    s.read.parquet(out)
+    s.read.parquet(w.out)
       .orderBy(col("user_id"), col("view_id"), col("buy_id"))
   }
 
@@ -331,40 +336,23 @@ object StreamQueries {
     * from batches < N. Hence the 3-batch shape: batch 0 (on-time rows with
     * even event_id, whose max ts − 6 h becomes the cutoff), batch 1
     * (remaining on-time rows, judged against watermark 0), batch 2 (the
-    * late file, judged against batch 0's cutoff — a late row reaches the
+    * late stage, judged against batch 0's cutoff — a late row reaches the
     * aggregation only if its 1-hour window still ends beyond it). Update
-    * mode emits each changed window per batch; tagging emissions with the
-    * micro-batch id and keeping the LAST version per (window, type)
-    * reconstructs the final state. The DuckDB oracle re-derives the
-    * accepted set relationally — on-time rows plus late rows whose window
-    * end exceeds the same ms-truncated cutoff (watermarks are millisecond
-    * values; window ends are hour-aligned and the cutoff is not, so the
-    * </ ≤ boundary cannot be hit) — pinning the drop boundary itself
-    * against an engine with no watermark concept. */
+    * mode emits each changed window per batch; the last version per
+    * (window, type) reconstructs the final state. The DuckDB oracle
+    * re-derives the accepted set relationally — on-time rows plus late
+    * rows whose window end exceeds the same ms-truncated cutoff
+    * (watermarks are millisecond values; window ends are hour-aligned and
+    * the cutoff is not, so the </≤ boundary cannot be hit) — pinning the
+    * drop boundary itself against an engine with no watermark concept. */
   def streamLate(s: SparkSession, dir: String): DataFrame = {
-    val out = runOnce(s, dir, "stream_late") { p =>
-      val out = s"$p.parquet"
-      val replay = s"${p}_replay"
-      val chk = s"${p}_chk"
+    val w = runOnce(s, dir, "stream_late") { w =>
       val ev = graft.Tables(s, dir, "events")
         .select(col("event_id"), col("ts"), col("event_type"))
       val onTime = ev.filter(col("event_id") % 5 =!= 0)
-      onTime.filter(col("event_id") % 2 === 0)
-        .coalesce(1).write.mode("overwrite").parquet(replay)
-      stampStage(replay, 0)
-      onTime.filter(col("event_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(replay)
-      stampStage(replay, 1)
-      ev.filter(col("event_id") % 5 === 0)
-        .coalesce(1).write.mode("append").parquet(replay)
-      stampStage(replay, 2)
-      val src = s.readStream
-        .schema(StructType(Seq(
-          StructField("event_id", LongType),
-          StructField("ts", TimestampType),
-          StructField("event_type", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
+      val src = stage(s, w, onTime.filter(col("event_id") % 2 === 0),
+        onTime.filter(col("event_id") % 2 === 1),
+        ev.filter(col("event_id") % 5 === 0))()
       val agg = src.withWatermark("ts", "6 hours")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
@@ -374,61 +362,26 @@ object StreamQueries {
         .select(unix_micros(col("window.start")).as("window_us"),
           col("event_type"), col("n_events"), col("sum_ids"),
           col("min_id"), col("max_id"))
-      val q = agg.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          batch.withColumn("batch_id", lit(bid))
-            .write.mode("append").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-      out
+      drain(agg, "update", w)(appendTagged(w))
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("window_us"), col("event_type"))
-      .orderBy(col("batch_id").desc)
-    s.read.parquet(out)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("window_us"), col("event_type"), col("n_events"),
-        col("sum_ids"), col("min_id"), col("max_id"))
+    lastVersion(s, w, "window_us", "event_type")
       .orderBy(col("window_us"), col("event_type"))
   }
 
   /** Arbitrary stateful processing (`mapGroupsWithState`) under the hash
     * oracle: per-user running (count, Σid, min/max µs) accumulated across
-    * THREE micro-batches (`event_id mod 3` split, `maxFilesPerTrigger=1`)
-    * — a user seen in several batches must fold new rows into the state
-    * store's carried value; any lost or re-initialized state breaks the
-    * exact integer sums vs the oracle's plain GROUP BY over `events`.
-    * Update-mode emissions are batch-tagged and compacted to the last
-    * version per user (same discipline as [[streamLate]]). Fold order
-    * within a batch is irrelevant: every accumulator is commutative. */
+    * THREE micro-batches (`event_id mod 3` split) — a user seen in several
+    * batches must fold new rows into the state store's carried value; any
+    * lost or re-initialized state breaks the exact integer sums vs the
+    * oracle's plain GROUP BY over `events`. The final state is the last
+    * update-mode emission per user. Fold order within a batch is
+    * irrelevant: every accumulator is commutative. */
   def streamState(s: SparkSession, dir: String): DataFrame = {
-    val out = runOnce(s, dir, "stream_state") { p =>
-      val out = s"$p.parquet"
-      val replay = s"${p}_replay"
-      val chk = s"${p}_chk"
+    val w = runOnce(s, dir, "stream_state") { w =>
+      import s.implicits._
       val ev = graft.Tables(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("ts"))
-      ev.filter(col("event_id") % 3 === 0)
-        .coalesce(1).write.mode("overwrite").parquet(replay)
-      stampStage(replay, 0)
-      ev.filter(col("event_id") % 3 === 1)
-        .coalesce(1).write.mode("append").parquet(replay)
-      stampStage(replay, 1)
-      ev.filter(col("event_id") % 3 === 2)
-        .coalesce(1).write.mode("append").parquet(replay)
-      stampStage(replay, 2)
-      import s.implicits._
-      val src = s.readStream
-        .schema(StructType(Seq(
-          StructField("event_id", LongType),
-          StructField("user_id", LongType),
-          StructField("ts", TimestampType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
+      val src = stage(s, w, idThirds(ev): _*)()
         .select(col("user_id"), col("event_id"),
           unix_micros(col("ts")).as("ts_us"))
         .as[StreamEv]
@@ -443,25 +396,9 @@ object StreamQueries {
           state.update(st)
           UserRunOut(uid, st.n, st.sumId, st.minUs, st.maxUs)
         }
-      val q = updated.toDF().writeStream
-        .outputMode("update")
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          batch.withColumn("batch_id", lit(bid))
-            .write.mode("append").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-      out
+      drain(updated.toDF(), "update", w)(appendTagged(w))
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("batch_id").desc)
-    s.read.parquet(out)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("user_id"), col("n_events"), col("sum_ids"),
-        col("first_us"), col("last_us"))
-      .orderBy(col("user_id"))
+    lastVersion(s, w, "user_id").orderBy(col("user_id"))
   }
 
   /** `transformWithState` (Spark 4's arbitrary-state successor to
@@ -473,62 +410,19 @@ object StreamQueries {
     * store shape. The last emission per user must equal the relational
     * argmax (count DESC, type ASC) DuckDB re-derives from `events`; a
     * single lost or double-counted MapState update flips a dominant type
-    * and breaks the hash. The provider override is scoped to this query's
-    * start (queries read the conf at start) and restored after. */
+    * and breaks the hash. */
   def streamTypedState(s: SparkSession, dir: String): DataFrame = {
-    val out = runOnce(s, dir, "stream_tws") { p =>
-      val out = s"$p.parquet"
-      val replay = s"${p}_replay"
-      val chk = s"${p}_chk"
+    val w = runOnce(s, dir, "stream_tws") { w =>
+      import s.implicits._
       val ev = graft.Tables(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"))
-      ev.filter(col("event_id") % 3 === 0)
-        .coalesce(1).write.mode("overwrite").parquet(replay)
-      stampStage(replay, 0)
-      ev.filter(col("event_id") % 3 === 1)
-        .coalesce(1).write.mode("append").parquet(replay)
-      stampStage(replay, 1)
-      ev.filter(col("event_id") % 3 === 2)
-        .coalesce(1).write.mode("append").parquet(replay)
-      stampStage(replay, 2)
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try {
-        import s.implicits._
-        val src = s.readStream
-          .schema(StructType(Seq(
-            StructField("event_id", LongType),
-            StructField("user_id", LongType),
-            StructField("event_type", StringType))))
-          .option("maxFilesPerTrigger", 1)
-          .parquet(replay)
-          .select(col("user_id"), col("event_type")).as[(Long, String)]
-        val q = TypeCounts.dominantType(src).toDF().writeStream
-          .outputMode("update")
-          .option("checkpointLocation", chk)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, bid: Long) =>
-            batch.withColumn("batch_id", lit(bid))
-              .write.mode("append").parquet(out)
-          }
-          .start()
-        q.awaitTermination()
-      } finally {
-        prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None    => s.conf.unset(key)
-        }
+      val src = stage(s, w, idThirds(ev): _*)()
+        .select(col("user_id"), col("event_type")).as[(Long, String)]
+      graft.Tables.withConf(s, RocksDB) {
+        drain(TypeCounts.dominantType(src).toDF(), "update", w)(appendTagged(w))
       }
-      out
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("batch_id").desc)
-    s.read.parquet(out)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("user_id"), col("top_type"), col("n"))
-      .orderBy(col("user_id"))
+    lastVersion(s, w, "user_id").orderBy(col("user_id"))
   }
 
   /** Event-time TIMERS ([[SessionCloser]], `TimeMode.EventTime`) under the
@@ -547,51 +441,20 @@ object StreamQueries {
     * emitted values (close_at = ms-truncated last hit + gap, n_hits)
     * relationally from `events` and the same split constant. */
   def streamTimer(s: SparkSession, dir: String): DataFrame = {
-    val out = runOnce(s, dir, "stream_timer") { p =>
-      val out = s"$p.parquet"
-      val replay = s"${p}_replay"
-      val chk = s"${p}_chk"
+    val w = runOnce(s, dir, "stream_timer") { w =>
+      import s.implicits._
       val ev = graft.Tables(s, dir, "events")
         .select(col("user_id"), col("ts"))
       val split = lit("2024-01-21").cast("timestamp")
-      ev.filter(col("ts") < split)
-        .coalesce(1).write.mode("overwrite").parquet(replay)
-      stampStage(replay, 0)
-      ev.filter(col("ts") >= split)
-        .coalesce(1).write.mode("append").parquet(replay)
-      stampStage(replay, 1)
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try {
-        import s.implicits._
-        val src = s.readStream
-          .schema(StructType(Seq(
-            StructField("user_id", LongType),
-            StructField("ts", TimestampType))))
-          .option("maxFilesPerTrigger", 1)
-          .parquet(replay)
-          .as[(Long, java.sql.Timestamp)]
-        val q = SessionCloser.closedSessions(src, gapMs = 900000L)
-          .toDF().writeStream
-          .outputMode("append")
-          .option("checkpointLocation", chk)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(out)
-          }
-          .start()
-        q.awaitTermination()
-      } finally {
-        prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None    => s.conf.unset(key)
-        }
+      val src = stage(s, w, ev.filter(col("ts") < split),
+        ev.filter(col("ts") >= split))()
+        .as[(Long, java.sql.Timestamp)]
+      graft.Tables.withConf(s, RocksDB) {
+        drain(SessionCloser.closedSessions(src, gapMs = 900000L).toDF(),
+          "append", w)(append(w))
       }
-      out
     }
-    s.read.parquet(out)
+    s.read.parquet(w.out)
       .select(col("user_id"), col("close_at_ms"), col("n_hits"))
       .orderBy(col("user_id"), col("close_at_ms"))
   }
@@ -601,79 +464,44 @@ object StreamQueries {
     * micro-batches in NON-time order (`event_id mod 3` split), merged by
     * `foreachBatch` into a versioned key-state table with last-write-wins
     * on (ts, event_id) — the MERGE INTO shape every lakehouse sink runs.
-    * Since r14 the versioned state lives in a
-    * [[graft.sources.SnapshotTable]] (the r13 verdict's integration gap:
-    * this query kept its own ad-hoc version directories next to the ACID
-    * table that owns the commit path): each batch is one OCC `transact`
-    * that rewrites the merged key-state — readers of version N stay
-    * isolated from the N+1 commit, every intermediate state remains
-    * time-travelable, and a retried batch re-merges IDEMPOTENTLY
-    * (last-write-wins on (ts, event_id) makes re-applying the same
-    * changes a no-op, so at-least-once delivery needs no txn tag here —
-    * contrast [[streamSnapshot]], whose blind appends DO need one).
-    * Because the merge compares (ts, event_id) rather than trusting
-    * arrival order, the final state is independent of batch slicing; the
-    * DuckDB oracle re-derives it as the relational argmax per user. */
+    * The versioned state lives in a [[graft.sources.SnapshotTable]]: each
+    * batch is one OCC `transact` that rewrites the merged key-state —
+    * readers of version N stay isolated from the N+1 commit, every
+    * intermediate state remains time-travelable, and a retried batch
+    * re-merges IDEMPOTENTLY (last-write-wins on (ts, event_id) makes
+    * re-applying the same changes a no-op, so at-least-once delivery needs
+    * no txn tag here — contrast [[streamSnapshot]], whose blind appends DO
+    * need one). Because the merge compares (ts, event_id) rather than
+    * trusting arrival order, the final state is independent of batch
+    * slicing; the DuckDB oracle re-derives it as the relational argmax per
+    * user. */
   def streamCdc(s: SparkSession, dir: String): DataFrame = {
-    val table = runOnce(s, dir, "stream_cdc") { p =>
-      val table = s"${p}_table"
-      val replay = s"${p}_replay"
-      val chk = s"${p}_chk"
+    val w = runOnce(s, dir, "stream_cdc") { w =>
       val ev = graft.Tables(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("event_type"))
-      ev.filter(col("event_id") % 3 === 0)
-        .coalesce(1).write.mode("overwrite").parquet(replay)
-      stampStage(replay, 0)
-      ev.filter(col("event_id") % 3 === 1)
-        .coalesce(1).write.mode("append").parquet(replay)
-      stampStage(replay, 1)
-      ev.filter(col("event_id") % 3 === 2)
-        .coalesce(1).write.mode("append").parquet(replay)
-      stampStage(replay, 2)
-      val src = s.readStream
-        .schema(StructType(Seq(
-          StructField("event_id", LongType),
-          StructField("user_id", LongType),
-          StructField("ts", TimestampType),
-          StructField("event_type", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
-      val q = src.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val changes = batch
-            .select(col("user_id"), unix_micros(col("ts")).as("last_us"),
-              col("event_id").as("last_event_id"), col("event_type"))
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("user_id"))
-            .orderBy(col("last_us").desc, col("last_event_id").desc)
-          graft.sources.SnapshotTable.transact(
-            batch.sparkSession, table, s"cdc-merge-b$bid") { cur =>
-            cur.map(_.unionByName(changes)).getOrElse(changes)
-              .withColumn("rn", row_number().over(w))
-              .filter(col("rn") === 1).drop("rn")
-          }
-          ()
+        .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
+      val src = stage(s, w, idThirds(ev): _*)()
+      drain(src, "append", w) { (batch, bid) =>
+        val changes = batch
+          .select(col("user_id"), unix_micros(col("ts")).as("last_us"),
+            col("event_id").as("last_event_id"), col("event_type"))
+        val latest = Window.partitionBy(col("user_id"))
+          .orderBy(col("last_us").desc, col("last_event_id").desc)
+        SnapshotTable.transact(batch.sparkSession, w.table, s"cdc-merge-b$bid") { cur =>
+          cur.map(_.unionByName(changes)).getOrElse(changes)
+            .withColumn("rn", row_number().over(latest))
+            .filter(col("rn") === 1).drop("rn")
         }
-        .start()
-      q.awaitTermination()
-      table
+      }
     }
-    graft.sources.SnapshotTable.read(s, table)
+    SnapshotTable.read(s, w.table)
       .select(col("user_id"), col("last_us"), col("last_event_id"),
         col("event_type"))
       .orderBy(col("user_id"))
   }
 
   /** Streaming ingestion into the ACID snapshot table, exactly once,
-    * under the hash oracle (r13 verdict task 1 — the two flagship
-    * surfaces finally meet: [[streamCdc]] owns its own ad-hoc version
-    * directories, while a real lake user's first workload is
-    * "stream → ACID table"). A 3-shard events replay
-    * (`maxFilesPerTrigger=1` ⇒ 3 micro-batches) drains through a
+    * under the hash oracle — "stream → ACID table", a lake user's first
+    * workload. A 3-stage events replay (3 micro-batches) drains through a
     * `foreachBatch` sink whose ONLY action is
     * [[graft.sources.SnapshotTable.appendOnce]] with the Delta txn-action
     * identity `"<tag>:<batchId>"` — each micro-batch becomes one OCC
@@ -686,55 +514,27 @@ object StreamQueries {
     * The kill-mid-drain restart (same contract under a real failure,
     * not a simulated redelivery) is SnapshotSinkSpec's half. */
   def streamSnapshot(s: SparkSession, dir: String): DataFrame = {
-    val table = runOnce(s, dir, "stream_snapshot") { p =>
-      val table = s"${p}_table"
-      val replay = s"${p}_replay"
-      val chk = s"${p}_chk"
+    val w = runOnce(s, dir, "stream_snapshot") { w =>
       val ev = graft.Tables(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("event_type"))
-      (0 to 2).foreach { k =>
-        ev.filter(col("event_id") % 3 === k)
-          .coalesce(1)
-          .write.mode(if (k == 0) "overwrite" else "append").parquet(replay)
-        stampStage(replay, k)
+        .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
+      val src = stage(s, w, idThirds(ev): _*)()
+      drain(src, "append", w) { (batch, bid) =>
+        val rows = batch.select(col("event_id"), col("user_id"),
+          unix_micros(col("ts")).as("ts_us"), col("event_type"))
+        SnapshotTable.appendOnce(batch.sparkSession, w.table, rows, txn = s"qss:$bid")
+        // the at-least-once redelivery, exercised IN the gate: a
+        // second commit of the same txn must be a no-op
+        SnapshotTable.appendOnce(batch.sparkSession, w.table, rows, txn = s"qss:$bid")
       }
-      val src = s.readStream
-        .schema(StructType(Seq(
-          StructField("event_id", LongType),
-          StructField("user_id", LongType),
-          StructField("ts", TimestampType),
-          StructField("event_type", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
-      val q = src.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val rows = batch.select(col("event_id"), col("user_id"),
-            unix_micros(col("ts")).as("ts_us"), col("event_type"))
-          graft.sources.SnapshotTable.appendOnce(
-            batch.sparkSession, table, rows, txn = s"qss:$bid")
-          // the at-least-once redelivery, exercised IN the gate: a
-          // second commit of the same txn must be a no-op
-          graft.sources.SnapshotTable.appendOnce(
-            batch.sparkSession, table, rows, txn = s"qss:$bid")
-          ()
-        }
-        .start()
-      q.awaitTermination()
-      table
     }
-    graft.sources.SnapshotTable.read(s, table)
+    SnapshotTable.read(s, w.table)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("event_id")).as("sum_ids"),
         sum(col("user_id")).as("sum_users"),
         min(col("ts_us")).as("min_us"),
         max(col("ts_us")).as("max_us"))
-      .withColumn("n_versions",
-        lit(graft.sources.SnapshotTable.latestVersion(table)))
+      .withColumn("n_versions", lit(SnapshotTable.latestVersion(w.table)))
       .orderBy(col("event_type"))
   }
 
@@ -762,29 +562,14 @@ object StreamQueries {
     * sees a rolling horizon, the standard trade; the finite replay here
     * keeps NoTimeout so the oracle can express the full semantics. */
   def streamNearDup(s: SparkSession, dir: String): DataFrame = {
-    val out = runOnce(s, dir, "stream_neardup") { p =>
-      val out = s"$p.parquet"
-      val replay = s"${p}_replay"
-      val chk = s"${p}_chk"
+    val w = runOnce(s, dir, "stream_neardup") { w =>
+      import s.implicits._
       val banded = graft.ops.AffineSketch.bandedKeys(s, dir)
       val mx = banded.agg(max(col("doc_id"))).head().getLong(0)
-      // id-ordered arrival: three stages by doc_id range (stamped so
-      // FileStreamSource's mtime order can never tie), maxFilesPerTrigger=1
-      Seq(col("doc_id") <= mx / 3,
-        col("doc_id") > mx / 3 && col("doc_id") <= 2 * mx / 3,
-        col("doc_id") > 2 * mx / 3).zipWithIndex.foreach { case (pred, k) =>
-        banded.filter(pred).coalesce(1)
-          .write.mode(if (k == 0) "overwrite" else "append").parquet(replay)
-        stampStage(replay, k)
-      }
-      import s.implicits._
-      val src = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("band", org.apache.spark.sql.types.IntegerType),
-          StructField("bkey", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
+      // id-ordered arrival: three stages by doc_id range
+      val src = stage(s, w, banded.filter(col("doc_id") <= mx / 3),
+        banded.filter(col("doc_id") > mx / 3 && col("doc_id") <= 2 * mx / 3),
+        banded.filter(col("doc_id") > 2 * mx / 3))()
         .as[BandRow]
       val hits = src.groupByKey(r => (r.band, r.bkey))
         .flatMapGroupsWithState[Long, DupHit](
@@ -800,18 +585,9 @@ object StreamQueries {
           state.update(minSoFar)
           emitted.iterator
         }
-      val q = hits.toDF().writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-      out
+      drain(hits.toDF(), "append", w)(append(w))
     }
-    s.read.parquet(out)
+    s.read.parquet(w.out)
       .groupBy(col("doc_id"))
       .agg(min(col("dup_of")).as("dup_of"),
         count(lit(1)).cast("int").as("n_dup_bands"))
@@ -836,46 +612,29 @@ object StreamQueries {
     * ignoreDeletes/ignoreChanges opt-outs) is SnapshotStreamSpec's
     * half — policy errors are not oracle-expressible. */
   def streamTableRead(s: SparkSession, dir: String): DataFrame = {
-    val out = runOnce(s, dir, "stream_tableread") { p =>
-      val table = s"${p}_table"
-      val chk = s"${p}_chk"
-      val out = s"$p.parquet"
+    val w = runOnce(s, dir, "stream_tableread") { w =>
       def orders = graft.Tables(s, dir, "orders")
         .select(col("o_orderkey").as("k"),
           floor(col("o_totalprice") * 100).cast("long").as("cents"))
-      def runStream(): Unit = {
-        val src = s.readStream
+      def runStream(): Unit = drain(
+        s.readStream
           .format(classOf[graft.sources.SnapshotStreamProvider].getName)
-          .option("path", table)
+          .option("path", w.table)
           .load()
-        val agg = src.groupBy((col("k") % 8).as("bucket"))
-          .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("sum_cents"))
-        val q = agg.writeStream
-          .outputMode("complete")
-          .option("checkpointLocation", chk)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.coalesce(1).write.mode("overwrite").parquet(out)
-          }
-          .start()
-        q.awaitTermination()
-      }
+          .groupBy((col("k") % 8).as("bucket"))
+          .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("sum_cents")),
+        "complete", w)(overwriteLast(w))
       (0 to 2).foreach { r =>
-        graft.sources.SnapshotTable.append(s, table,
-          orders.filter(col("k") % 3 === r))
-        ()
+        SnapshotTable.append(s, w.table, orders.filter(col("k") % 3 === r))
       }
       runStream()
-      graft.sources.SnapshotTable.append(s, table,
+      SnapshotTable.append(s, w.table,
         orders.filter(col("k") % 5 === 0)
           .select(col("k"), (col("cents") + 7000).as("cents")))
       runStream()
-      out
     }
-    val table = s"${out.stripSuffix(".parquet")}_table"
-    s.read.parquet(out)
-      .withColumn("n_versions",
-        lit(graft.sources.SnapshotTable.latestVersion(table)))
+    s.read.parquet(w.out)
+      .withColumn("n_versions", lit(SnapshotTable.latestVersion(w.table)))
       .orderBy(col("bucket"))
   }
 
@@ -894,10 +653,7 @@ object StreamQueries {
     * before-image, mis-versioned a change, or leaked a rewrite breaks
     * the hash. */
   def streamCdfRead(s: SparkSession, dir: String): DataFrame = {
-    val out = runOnce(s, dir, "stream_cdfread") { p =>
-      val table = s"${p}_table"
-      val chk = s"${p}_chk"
-      val out = s"$p.parquet"
+    val w = runOnce(s, dir, "stream_cdfread") { w =>
       def dbase = graft.Tables(s, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("cust"),
           floor(col("o_totalprice") * 100).cast("long").as("cents"),
@@ -905,29 +661,20 @@ object StreamQueries {
       def reins = dbase.filter(col("cust") % 10 === 0 && col("k") % 3 === 0)
         .select(col("k"), col("cust"), (col("cents") + 3000).as("cents"),
           lit("r1").as("src"))
-      graft.sources.SnapshotTable.append(s, table, dbase)
-      graft.sources.SnapshotTable.deleteWhere(s, table,
+      SnapshotTable.append(s, w.table, dbase)
+      SnapshotTable.deleteWhere(s, w.table,
         dbase.filter(col("cust") % 10 === 0).select(col("k")), "k")
-      graft.sources.SnapshotTable.append(s, table, reins)
-      graft.sources.SnapshotTable.updateWhere(s, table, "k",
+      SnapshotTable.append(s, w.table, reins)
+      SnapshotTable.updateWhere(s, w.table, "k",
         col("cust") % 7 === 0, Map("cents" -> (col("cents") + 5000)))
       val src = s.readStream
         .format(classOf[graft.sources.SnapshotStreamProvider].getName)
-        .option("path", table)
+        .option("path", w.table)
         .option("readChangeFeed", "true")
         .load()
-      val q = src.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("append").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-      out
+      drain(src, "append", w)(append(w))
     }
-    s.read.parquet(out)
+    s.read.parquet(w.out)
       .groupBy(col("_commit_version"), col("_change_type"), col("src"))
       .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("sum_cents"))
       .orderBy(col("_commit_version"), col("_change_type"), col("src"))
@@ -953,23 +700,11 @@ object StreamQueries {
     * whole replay — no increment lost, none double-applied, through a
     * simulated partial failure. */
   def streamMedallion(s: SparkSession, dir: String): DataFrame = {
-    val silver = runOnce(s, dir, "stream_medallion") { p =>
-      val bronze = s"${p}_bronze"
-      val silver = s"${p}_silver"
-      val replay = s"${p}_replay"
-      val chk = s"${p}_chk"
-      val ev = graft.Tables(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"))
-      (0 to 2).foreach { k =>
-        ev.filter(col("event_id") % 3 === k)
-          .coalesce(1)
-          .write.mode(if (k == 0) "overwrite" else "append").parquet(replay)
-        stampStage(replay, k)
-      }
+    val w = runOnce(s, dir, "stream_medallion") { w =>
+      val (bronze, silver) = (w.file("bronze"), w.file("silver"))
       def silverApply(sp: SparkSession, rows: DataFrame,
           bid: Long): Option[Int] =
-        graft.sources.SnapshotTable.transactOnce(
-          sp, silver, s"silver-$bid", s"meds:$bid") { cur =>
+        SnapshotTable.transactOnce(sp, silver, s"silver-$bid", s"meds:$bid") { cur =>
           val delta = rows.groupBy(col("event_type"))
             .agg(count(lit(1)).as("n_events"),
               sum(col("event_id")).as("sum_ids"),
@@ -980,54 +715,37 @@ object StreamQueries {
               sum(col("sum_ids")).as("sum_ids"),
               sum(col("sum_users")).as("sum_users")))
         }
-      val src = s.readStream
-        .schema(StructType(Seq(
-          StructField("event_id", LongType),
-          StructField("user_id", LongType),
-          StructField("event_type", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
-      val q = src.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val sp = batch.sparkSession
-          val rows = batch.select(col("event_id"), col("user_id"),
-            col("event_type"))
-          graft.sources.SnapshotTable.appendOnce(
-            sp, bronze, rows, txn = s"medb:$bid")
-          // batch 1 "crashes" between the bronze and silver commits
-          if (bid != 1L) { silverApply(sp, rows, bid); () }
-          // the at-least-once redelivery of the WHOLE pair
-          val b2 = graft.sources.SnapshotTable.appendOnce(
-            sp, bronze, rows, txn = s"medb:$bid")
-          require(b2.isEmpty, s"bronze replay of batch $bid double-applied")
-          val s2 = silverApply(sp, rows, bid)
-          if (bid == 1L)
-            require(s2.nonEmpty, "replay failed to heal the crashed silver commit")
-          else
-            require(s2.isEmpty, s"silver replay of batch $bid double-applied")
-          ()
-        }
-        .start()
-      q.awaitTermination()
-      // the gate also pins bronze content ≡ Σ increments: silver is
-      // re-derivable from bronze, and both versions counts ride the hash
-      s"$bronze|$silver"
+      val ev = graft.Tables(s, dir, "events")
+        .select(col("event_id"), col("user_id"), col("event_type"))
+      val src = stage(s, w, idThirds(ev): _*)()
+      drain(src, "append", w) { (batch, bid) =>
+        val sp = batch.sparkSession
+        val rows = batch.select(col("event_id"), col("user_id"),
+          col("event_type"))
+        SnapshotTable.appendOnce(sp, bronze, rows, txn = s"medb:$bid")
+        // batch 1 "crashes" between the bronze and silver commits
+        if (bid != 1L) silverApply(sp, rows, bid)
+        // the at-least-once redelivery of the WHOLE pair
+        val b2 = SnapshotTable.appendOnce(sp, bronze, rows, txn = s"medb:$bid")
+        require(b2.isEmpty, s"bronze replay of batch $bid double-applied")
+        val s2 = silverApply(sp, rows, bid)
+        if (bid == 1L)
+          require(s2.nonEmpty, "replay failed to heal the crashed silver commit")
+        else
+          require(s2.isEmpty, s"silver replay of batch $bid double-applied")
+      }
     }
-    val Array(bronzeT, silverT) = silver.split('|')
-    graft.sources.SnapshotTable.read(s, silverT)
+    SnapshotTable.read(s, w.file("silver"))
       .withColumn("n_bronze_versions",
-        lit(graft.sources.SnapshotTable.latestVersion(bronzeT)))
+        lit(SnapshotTable.latestVersion(w.file("bronze"))))
       .withColumn("n_silver_versions",
-        lit(graft.sources.SnapshotTable.latestVersion(silverT)))
+        lit(SnapshotTable.latestVersion(w.file("silver"))))
       .orderBy(col("event_type"))
   }
 
   /** The custom DSv2 MicroBatchStream
-    * ([[graft.sources.EventsSource]]) under the hash oracle — the last
-    * spec-only streaming surface: a 20,000-id space drained through the
+    * ([[graft.sources.EventsSource]]) under the hash oracle: a
+    * 20,000-id space drained through the
     * source's admission control (`SupportsAdmissionControl`,
     * `rowsPerBatch=4000` ⇒ 5 rate-limited micro-batches, the
     * Kafka-style offset bookkeeping), aggregated per event_type across
@@ -1037,16 +755,14 @@ object StreamQueries {
     * round-trip is not exact); the DuckDB oracle re-derives the whole
     * relation from `generate_series` and the source's published
     * Knuth-scatter formulas — the generator contract itself is what the
-    * hash pins. `dir` is unused: the source is synthetic by design. */
+    * hash pins. `dir` is unused: the source is synthetic by design.
+    * EventsSource implements SupportsTriggerAvailableNow, so the drain
+    * stops at the end offset snapshotted when the query starts. */
   def streamV2Source(s: SparkSession, dir: String): DataFrame = {
-    val out = runOnce(s, dir, "stream_v2src") { p =>
-      val out = s"$p.parquet"
-      val chk = s"${p}_chk"
-      // rowsPerBatch 4000 ⇒ 5 admission-controlled micro-batches: enough
-      // to prove the rate-limited drain (SourcesV2Spec separately pins
-      // ≥5 batches at 1000), and 4× cheaper than the former 20-batch
-      // shape — per-batch cost here is complete-mode state + checkpoint +
-      // parquet machinery, not data volume (solo 34.7 s → ~10 s)
+    val w = runOnce(s, dir, "stream_v2src") { w =>
+      // 5 batches prove the rate-limited drain (SourcesV2Spec separately
+      // pins ≥5 batches at 1000); per-batch cost here is complete-mode
+      // state + checkpoint + parquet machinery, not data volume
       val src = s.readStream.format("graft.sources.EventsSource")
         .option("rows", 20000L).option("partitions", 8)
         .option("rowsPerBatch", 4000L).load()
@@ -1059,23 +775,9 @@ object StreamQueries {
           sum(col("cents")).as("sum_cents"),
           min(col("ts_us")).as("min_us"),
           max(col("ts_us")).as("max_us"))
-      // Trigger.AvailableNow is honored natively since EventsSource
-      // implements SupportsTriggerAvailableNow (prepare snapshots the end
-      // offset; each trigger drains one rate-limited batch toward it) —
-      // the properly bounded drain, replacing the round-11
-      // processAllAvailable workaround with an unchanged result hash
-      val q = agg.writeStream
-        .outputMode("complete")
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.coalesce(1).write.mode("overwrite").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-      out
+      drain(agg, "complete", w)(overwriteLast(w))
     }
-    s.read.parquet(out).orderBy(col("event_type"))
+    s.read.parquet(w.out).orderBy(col("event_type"))
   }
 
   /** SLIDING (overlapping) windows through the streaming state store —
@@ -1090,19 +792,10 @@ object StreamQueries {
     * epoch-aligned window starts (session TZ is UTC, so Spark's window
     * alignment is epoch arithmetic). */
   def streamSliding(s: SparkSession, dir: String): DataFrame = {
-    val out = runOnce(s, dir, "stream_sliding") { p =>
-      val out = s"$p.parquet"
-      val replay = s"${p}_replay"
-      val chk = s"${p}_chk"
-      graft.Tables(s, dir, "events")
+    val w = runOnce(s, dir, "stream_sliding") { w =>
+      val ev = graft.Tables(s, dir, "events")
         .select(col("event_id"), col("ts"), col("event_type"))
-        .coalesce(1).write.mode("overwrite").parquet(replay)
-      val src = s.readStream
-        .schema(StructType(Seq(
-          StructField("event_id", LongType),
-          StructField("ts", TimestampType),
-          StructField("event_type", StringType))))
-        .parquet(replay)
+      val src = stage(s, w, ev)()
       val agg = src
         .groupBy(window(col("ts"), "2 hours", "30 minutes"),
           col("event_type"))
@@ -1113,85 +806,57 @@ object StreamQueries {
         .select(unix_micros(col("window.start")).as("window_us"),
           col("event_type"), col("n_events"), col("sum_ids"),
           col("min_id"), col("max_id"))
-      val q = agg.writeStream
-        .outputMode("complete")
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.coalesce(1).write.mode("overwrite").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-      out
+      drain(agg, "complete", w)(overwriteLast(w))
     }
-    s.read.parquet(out).orderBy(col("window_us"), col("event_type"))
+    s.read.parquet(w.out).orderBy(col("window_us"), col("event_type"))
   }
 
   /** Streaming RESTART-RECOVERY under the hash oracle — the failure half
     * of exactly-once that run-to-completion queries never exercise: a
-    * checkpointed per-user aggregation over a 4-shard replay
-    * (`maxFilesPerTrigger=1`) is STOPPED as soon as its first micro-batch
-    * commits (`StreamingQuery.stop()` mid-drain — possibly mid-batch, the
-    * interruption a real failure produces), two more shards arrive while
-    * it is down, and a SECOND query instance restarts from the same
-    * checkpoint and drains to completion. The final complete-mode state
-    * equals the relational aggregate over ALL events only if recovery was
-    * exact on both logs: a lost/rewound offset log re-reads a processed
-    * shard and double-counts (complete mode folds it into recovered
-    * state); a lost state store drops the pre-stop shards and
-    * undercounts; an uncommitted-but-written batch must replay
-    * deterministically onto its pre-batch state version. Every measure is
-    * a commutative exact integer, so the result is invariant to WHERE the
-    * stop landed — the hash pins recovery, not timing. The deterministic
-    * two-phase variant (exact batch counts across the restart) is pinned
-    * in StreamingSpec. */
+    * checkpointed per-user aggregation over a 4-shard replay is STOPPED as
+    * soon as its first micro-batch commits (`StreamingQuery.stop()`
+    * mid-drain — possibly mid-batch, the interruption a real failure
+    * produces), two more shards arrive while it is down, and a SECOND
+    * query instance restarts from the same checkpoint and drains to
+    * completion. The final complete-mode state equals the relational
+    * aggregate over ALL events only if recovery was exact on both logs: a
+    * lost/rewound offset log re-reads a processed shard and double-counts
+    * (complete mode folds it into recovered state); a lost state store
+    * drops the pre-stop shards and undercounts; an uncommitted-but-written
+    * batch must replay deterministically onto its pre-batch state version.
+    * Every measure is a commutative exact integer, so the result is
+    * invariant to WHERE the stop landed — the hash pins recovery, not
+    * timing. The deterministic two-phase variant (exact batch counts
+    * across the restart) is pinned in StreamingSpec. */
   def streamResume(s: SparkSession, dir: String): DataFrame = {
-    val out = runOnce(s, dir, "stream_resume") { p =>
-      val out = s"$p.parquet"
-      val replay = s"${p}_replay"
-      val chk = s"${p}_chk"
+    val w = runOnce(s, dir, "stream_resume") { w =>
       val ev = graft.Tables(s, dir, "events")
         .select(col("event_id"), col("user_id"))
-      def shard(k: Int): Unit = {
-        ev.filter(col("event_id") % 4 === k)
-          .coalesce(1)
-          .write.mode(if (k == 0) "overwrite" else "append").parquet(replay)
-        stampStage(replay, k)
-      }
-      (0 to 1).foreach(shard)
-      def start() = s.readStream
-        .schema(StructType(Seq(
-          StructField("event_id", LongType),
-          StructField("user_id", LongType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
+      val shards = (0 to 3).map(k => ev.filter(col("event_id") % 4 === k))
+      val src = stage(s, w, shards.take(2): _*)
+      def resume() = start(src()
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"),
           sum(col("event_id")).as("sum_ids"),
           min(col("event_id")).as("min_id"),
-          max(col("event_id")).as("max_id"))
-        .writeStream
-        .outputMode("complete")
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.coalesce(1).write.mode("overwrite").parquet(out)
-        }
-        .start()
-      val q1 = start()
+          max(col("event_id")).as("max_id")),
+        "complete", w)(overwriteLast(w))
+      val q1 = resume()
       // interrupt mid-drain: stop the moment the first batch has committed
       // (AvailableNow bounds the race — if the drain outruns the poll, q1
       // simply terminated and the appended shards below still force q2 to
       // resume against the checkpointed state)
-      while (q1.isActive && q1.lastProgress == null) Thread.sleep(25)
+      val deadline = DrainWait.fromNow
+      while (q1.isActive && q1.lastProgress == null) {
+        if (deadline.isOverdue()) timedOut(q1, w)
+        Thread.sleep(25)
+      }
       q1.stop()
-      q1.awaitTermination()
-      (2 to 3).foreach(shard)
-      val q2 = start()
-      q2.awaitTermination()
-      out
+      await(q1, w)
+      (2 to 3).foreach(k => writeStage(w, k, shards(k)))
+      await(resume(), w)
     }
-    s.read.parquet(out).orderBy(col("user_id"))
+    s.read.parquet(w.out).orderBy(col("user_id"))
   }
 
   /** `dropDuplicatesWithinWatermark` under the hash oracle — the
@@ -1207,46 +872,18 @@ object StreamQueries {
     * and breaks the exact integer sums vs a DuckDB oracle that reads the
     * ORIGINAL events relation. */
   def streamDedupWm(s: SparkSession, dir: String): DataFrame = {
-    val out = runOnce(s, dir, "stream_dedup_wm") { p =>
-      val out = s"$p.parquet"
-      val replay = s"${p}_replay"
-      val chk = s"${p}_chk"
+    val w = runOnce(s, dir, "stream_dedup_wm") { w =>
       val ev = graft.Tables(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("event_type"))
+        .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
       val maxUs = ev.agg(max(unix_micros(col("ts")))).head().getLong(0)
       val d6 = maxUs - 6L * 86400L * 1000000L
       val d8 = maxUs - 8L * 86400L * 1000000L
-      ev.coalesce(1).write.mode("overwrite").parquet(replay)
-      stampStage(replay, 0)
-      ev.filter(unix_micros(col("ts")) >= d6)
-        .coalesce(1).write.mode("append").parquet(replay)
-      stampStage(replay, 1)
-      ev.filter(unix_micros(col("ts")) < d8)
-        .coalesce(1).write.mode("append").parquet(replay)
-      stampStage(replay, 2)
-      val src = s.readStream
-        .schema(StructType(Seq(
-          StructField("event_id", LongType),
-          StructField("user_id", LongType),
-          StructField("ts", TimestampType),
-          StructField("event_type", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
-      val q = src.withWatermark("ts", "7 days")
-        .dropDuplicatesWithinWatermark("event_id")
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-      out
+      val src = stage(s, w, ev, ev.filter(unix_micros(col("ts")) >= d6),
+        ev.filter(unix_micros(col("ts")) < d8))()
+      drain(src.withWatermark("ts", "7 days").dropDuplicatesWithinWatermark("event_id"),
+        "append", w)(append(w))
     }
-    s.read.parquet(out)
+    s.read.parquet(w.out)
       .groupBy(col("event_type"),
         floor(unix_micros(col("ts")) / lit(7L * 86400L * 1000000L))
           .as("wk"))
@@ -1270,50 +907,25 @@ object StreamQueries {
     * slice and evicts+emits unmatched views progressively (the
     * 45-day-watermark trick [[streamJoin]] uses to AVOID eviction would
     * here emit zero outer rows). The RESULT is slice-count-independent —
-    * the emission set is determined by the FINAL watermark alone, so the
-    * batch granularity is a free operational knob (a span-proportional
-    * weekly split was measured at 10× growing with batch COUNT, pure
-    * machinery; the fixed split measures the operator). The DuckDB
-    * oracle re-derives both halves relationally: the interval inner
-    * join, plus NOT-EXISTS views whose 6-hour horizon lies strictly
-    * below the final global watermark — min over both sides of
-    * (ms-truncated max event time) minus the 24-hour delay; views
-    * inside that tail are provably WITHHELD (the append-mode outer-join
-    * contract, here made exact). */
+    * the emission set is determined by the FINAL watermark alone — so the
+    * split is fixed at 3 slices: the cost grows with batch COUNT, pure
+    * machinery. The DuckDB oracle re-derives both halves relationally: the
+    * interval inner join, plus NOT-EXISTS views whose 6-hour horizon lies
+    * strictly below the final global watermark — min over both sides of
+    * (ms-truncated max event time) minus the 24-hour delay; views inside
+    * that tail are provably WITHHELD (the append-mode outer-join contract,
+    * here made exact). */
   def streamOuter(s: SparkSession, dir: String): DataFrame = {
-    val out = runOnce(s, dir, "stream_outer") { p =>
-      val out = s"$p.parquet"
-      val replay = s"${p}_replay"
-      val chk = s"${p}_chk"
+    val w = runOnce(s, dir, "stream_outer") { w =>
       val ev = graft.Tables(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("event_type"))
+        .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
         .filter(col("event_type").isin("view", "purchase"))
-      val Array(loUs, hiUs) = ev
-        .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
-        .head().toSeq.map(_.asInstanceOf[Long]).toArray
-      val width = (hiUs - loUs) / 3L + 1L
-      val sliced = ev.withColumn("sl",
-        least(lit(2L), expr(s"(unix_micros(ts) - ${loUs}L) div ${width}L")))
-      (0 to 2).foreach { i =>
-        sliced.filter(col("sl") === i).drop("sl")
-          .coalesce(1)
-          .write.mode(if (i == 0) "overwrite" else "append").parquet(replay)
-        stampStage(replay, i)
-      }
-      def src = s.readStream
-        .schema(StructType(Seq(
-          StructField("event_id", LongType),
-          StructField("user_id", LongType),
-          StructField("ts", TimestampType),
-          StructField("event_type", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
-      val views = src.filter(col("event_type") === "view")
+      val src = stage(s, w, timeThirds(ev): _*)
+      val views = src().filter(col("event_type") === "view")
         .select(col("event_id").as("view_id"), col("user_id"),
           col("ts").as("view_ts"))
         .withWatermark("view_ts", "24 hours")
-      val buys = src.filter(col("event_type") === "purchase")
+      val buys = src().filter(col("event_type") === "purchase")
         .select(col("event_id").as("buy_id"), col("user_id").as("buy_user"),
           col("ts").as("buy_ts"))
         .withWatermark("buy_ts", "24 hours")
@@ -1325,74 +937,44 @@ object StreamQueries {
         .select(col("user_id"), col("view_id"), col("buy_id"),
           unix_micros(col("view_ts")).as("view_us"),
           unix_micros(col("buy_ts")).as("buy_us"))
-      val q = joined.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-      out
+      drain(joined, "append", w)(append(w))
     }
-    s.read.parquet(out)
+    s.read.parquet(w.out)
       .orderBy(col("user_id"), col("view_id"), col("buy_id"))
   }
 
   /** STATE-STORE OBSERVABILITY under the hash oracle: after a checkpointed
     * streaming aggregation drains (per-user count/Σid/min-max µs across 3
-    * time-ordered micro-batches), the checkpoint's state store itself is
-    * read back as a BATCH relation via Spark 4's `statestore` data source
-    * and hash-compared to the oracle's plain GROUP BY over `events`. This
-    * is a different claim from [[streamState]] (which gates the EMITTED
-    * rows): here the bytes persisted in the state store — the thing a
-    * restart recovers from, the thing an operator debugs with — must
-    * reconstruct the relational aggregate exactly. Together with
-    * `q_stream_resume` (recovery replays correctly) this closes the loop:
-    * the state is right, and restarting from it is right. Key/value struct
-    * columns are unnested positionally (the store's internal value-row
-    * field names are an implementation detail; its FIELD ORDER is the
-    * aggregation schema, which we pin). At scale the same reader is the
-    * ops tool for state-size audits and skew triage: it is partitioned by
+    * micro-batches), the checkpoint's state store itself is read back as a
+    * BATCH relation via Spark 4's `statestore` data source and
+    * hash-compared to the oracle's plain GROUP BY over `events`. This is a
+    * different claim from [[streamState]] (which gates the EMITTED rows):
+    * here the bytes persisted in the state store — the thing a restart
+    * recovers from, the thing an operator debugs with — must reconstruct
+    * the relational aggregate exactly. Together with `q_stream_resume`
+    * (recovery replays correctly) this closes the loop: the state is
+    * right, and restarting from it is right. Key/value struct columns are
+    * unnested positionally (the store's internal value-row field names are
+    * an implementation detail; its FIELD ORDER is the aggregation schema,
+    * which we pin). At scale the same reader is the ops tool for
+    * state-size audits and skew triage: it is partitioned by
     * `partition_id`, so a 1000-executor cluster scans a TB-sized RocksDB
     * checkpoint in parallel without touching the running stream. */
   def streamStateRead(s: SparkSession, dir: String): DataFrame = {
-    val out = runOnce(s, dir, "stream_state_read") { p =>
-      val out = s"$p.parquet"
-      val replay = s"${p}_replay"
-      val chk = s"${p}_chk"
+    val w = runOnce(s, dir, "stream_state_read") { w =>
       val ev = graft.Tables(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("ts"))
-      (0 to 2).foreach { i =>
-        ev.filter(col("event_id") % 3 === i)
-          .coalesce(1)
-          .write.mode(if (i == 0) "overwrite" else "append").parquet(replay)
-        stampStage(replay, i)
-      }
-      val src = s.readStream
-        .schema(StructType(Seq(
-          StructField("event_id", LongType),
-          StructField("user_id", LongType),
-          StructField("ts", TimestampType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
+      val src = stage(s, w, idThirds(ev): _*)()
       val agg = src.groupBy(col("user_id")).agg(
         count(lit(1)).as("n_events"),
         sum(col("event_id")).as("sum_ids"),
         min(unix_micros(col("ts"))).as("first_us"),
         max(unix_micros(col("ts"))).as("last_us"))
-      val q = agg.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.count() // force the micro-batch (foreachBatch is lazy —
-          (): Unit      // no action, no state update); rows discarded:
-        }               // the QUERY RESULT here is the checkpoint, read below
-        .start()
-      q.awaitTermination()
-      val state = s.read.format("statestore").load(chk)
+      drain(agg, "update", w) { (batch, _) =>
+        batch.count() // force the micro-batch (foreachBatch is lazy —
+        ()            // no action, no state update); rows discarded:
+      }               // the QUERY RESULT here is the checkpoint, read below
+      val state = s.read.format("statestore").load(w.chk)
       val keyF = state.select(col("key.*")).columns
       val valF = state.select(col("value.*")).columns
       state.select(
@@ -1401,10 +983,9 @@ object StreamQueries {
           col(s"value.`${valF(1)}`").cast(LongType).as("sum_ids"),
           col(s"value.`${valF(2)}`").cast(LongType).as("first_us"),
           col(s"value.`${valF(3)}`").cast(LongType).as("last_us"))
-        .write.mode("overwrite").parquet(out)
-      out
+        .write.mode("overwrite").parquet(w.out)
     }
-    s.read.parquet(out).orderBy(col("user_id"))
+    s.read.parquet(w.out).orderBy(col("user_id"))
   }
 
   /** CHAINED STATEFUL AGGREGATIONS in one streaming query (Spark 3.4+
@@ -1425,29 +1006,10 @@ object StreamQueries {
     * pattern (minute → hour → day) that otherwise costs one query + one
     * intermediate topic per grain. */
   def streamChained(s: SparkSession, dir: String): DataFrame = {
-    val out = runOnce(s, dir, "stream_chained") { p =>
-      val out = s"$p.parquet"
-      val replay = s"${p}_replay"
-      val chk = s"${p}_chk"
-      val ev = graft.Tables(s, dir, "events").select(col("user_id"), col("ts"))
-      val Array(loUs, hiUs) = ev
-        .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
-        .head().toSeq.map(_.asInstanceOf[Long]).toArray
-      val width = (hiUs - loUs) / 3L + 1L
-      val sliced = ev.withColumn("sl",
-        least(lit(2L), expr(s"(unix_micros(ts) - ${loUs}L) div ${width}L")))
-      (0 to 2).foreach { i =>
-        sliced.filter(col("sl") === i).drop("sl")
-          .coalesce(1)
-          .write.mode(if (i == 0) "overwrite" else "append").parquet(replay)
-        stampStage(replay, i)
-      }
-      val src = s.readStream
-        .schema(StructType(Seq(
-          StructField("user_id", LongType),
-          StructField("ts", TimestampType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
+    val w = runOnce(s, dir, "stream_chained") { w =>
+      val ev = graft.Tables(s, dir, "events")
+        .select(col("user_id"), col("ts"))
+      val src = stage(s, w, timeThirds(ev): _*)()
       val perUserBucket = src
         .withWatermark("ts", "0 seconds")
         .groupBy(window(col("ts"), "10 minutes"), col("user_id"))
@@ -1459,18 +1021,9 @@ object StreamQueries {
           max(col("n")).as("max_bucket"))
         .select(unix_micros(col("window.start")).as("hour_us"),
           col("n_user_buckets"), col("n_events"), col("max_bucket"))
-      val q = hourly.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-      out
+      drain(hourly, "append", w)(append(w))
     }
-    s.read.parquet(out).orderBy(col("hour_us"))
+    s.read.parquet(w.out).orderBy(col("hour_us"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1496,6 +1049,7 @@ object StreamQueries {
     "q_stream_state_read" -> (streamStateRead _),
     "q_stream_chained" -> (streamChained _),
   )
+
 
   /** session_window's half-open interval: new session when gap >= 15 min
     * (the same boundary rule q_session_window's batch twin pins). */

@@ -47,19 +47,23 @@ class EntrySpec extends SparkSpec {
   // full construction sweep would double that cost and accumulate cached
   // RDDs (ADVICE r8). Each query gets its own new session, whose function
   // registry and temp views start empty, so a query that only resolves
-  // after another one ran (the solo-run failure mode) fails here.
-  private lazy val built: Seq[(String, org.apache.spark.sql.DataFrame)] =
+  // after another one ran (the solo-run failure mode) fails here. The
+  // session is kept to check that the query left no stream running in it.
+  private lazy val built: Seq[(String, org.apache.spark.sql.SparkSession,
+      org.apache.spark.sql.DataFrame)] =
     SparkEntry.queries.toSeq.map { case (name, fn) =>
-      name -> fn(spark.newSession(), sf001) }
+      val session = spark.newSession()
+      (name, session, fn(session, sf001)) }
 
   test("every query runs at sf0.001 with columns and rows") {
     val empties = Seq("q_jaccard_pairs", "q_cosine_pairs",
       "q_minhash_candidates", "q_join_anti") // legitimately may be empty/small
-    built.foreach { case (name, df) =>
+    built.foreach { case (name, session, df) =>
       assert(df.columns.nonEmpty, s"$name has no columns")
       val n = df.count()
       if (!empties.contains(name))
         assert(n > 0, s"$name returned 0 rows at sf0.001")
+      assert(session.streams.active.isEmpty, s"$name left a stream running")
     }
   }
 
@@ -69,7 +73,7 @@ class EntrySpec extends SparkSpec {
     // (the r7 q_pack_boundaries failure). Serialize to a canonical string
     // (concat_ws over array_sort) instead of whitelisting here.
     import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-    val bad = built.flatMap { case (name, df) =>
+    val bad = built.flatMap { case (name, _, df) =>
       df.schema.fields.collect {
         case f if f.dataType.isInstanceOf[ArrayType] ||
           f.dataType.isInstanceOf[MapType] ||
