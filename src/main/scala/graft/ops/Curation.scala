@@ -72,19 +72,6 @@ object Curation {
       .orderBy(col("cluster_id"))
   }
 
-  /** Connected components by distributed min-label propagation — the core
-    * of [[dupClusters]], exposed for direct testing on crafted graphs.
-    *
-    * @param ids   one `id` column, every node (isolated nodes become
-    *              singleton components labeled by themselves)
-    * @param edges `id1`, `id2` pairs, either orientation, duplicates fine
-    * @param maxRounds fail-safe round cap; with pointer jumping convergence
-    *              takes O(log diameter) rounds, so the default 25 covers a
-    *              diameter beyond 2^25 — unreachable for near-dup chains.
-    *              If the cap IS hit the labels are not a fixpoint, so this
-    *              throws rather than quietly returning wrong components.
-    * @return (`id`, `lab`) with `lab` = min node id of the component
-    */
   /** Eager localCheckpoint that simultaneously observes one aggregate
     * metric over the rows being materialized (guide §1.2: the
     * convergence check rides the checkpoint job instead of paying its own
@@ -103,6 +90,42 @@ object Curation {
     (out, v)
   }
 
+  /** The round scaffold of the convergence loops ([[connectedComponents]],
+    * [[graphBfs]], [[sssp]], [[kCoreOf]]): runs `round` from `init` until
+    * it reports convergence, at most `maxRounds` times — a loop that
+    * converges on exactly round `maxRounds` returns. Running out of rounds
+    * throws: the state is then not a fixpoint, and a partial result would
+    * be silently wrong. `detail` renders the last state into the message. */
+  private def fixpoint[S](step: String, init: S, maxRounds: Int,
+      detail: S => String = (_: S) => "")(round: S => (S, Boolean)): S = {
+    var state = init
+    var converged = false
+    var rounds = 0
+    while (!converged && rounds < maxRounds) {
+      val (next, done) = round(state)
+      state = next
+      converged = done
+      rounds += 1
+    }
+    if (!converged)
+      throw new IllegalStateException(
+        s"$step did not converge within $maxRounds rounds${detail(state)}")
+    state
+  }
+
+  /** Connected components by distributed min-label propagation — the core
+    * of [[dupClusters]], exposed for direct testing on crafted graphs.
+    *
+    * @param ids   one `id` column, every node (isolated nodes become
+    *              singleton components labeled by themselves)
+    * @param edges `id1`, `id2` pairs, either orientation, duplicates fine
+    * @param maxRounds fail-safe round cap; with pointer jumping convergence
+    *              takes O(log diameter) rounds, so the default 25 covers a
+    *              diameter beyond 2^25 — unreachable for near-dup chains.
+    *              If the cap IS hit the labels are not a fixpoint, so this
+    *              throws rather than quietly returning wrong components.
+    * @return (`id`, `lab`) with `lab` = min node id of the component
+    */
   def connectedComponents(ids: DataFrame, edges: DataFrame,
                           maxRounds: Int = 25): DataFrame = {
     // symmetric closure: label min must flow both directions of each edge.
@@ -121,10 +144,12 @@ object Curation {
     // super-linear (observed: >10 min of driver CPU by round ~12 on a
     // 17-node graph). On a real cluster prefer checkpoint() to reliable
     // storage every few rounds; localCheckpoint keeps blocks on executors.
-    var labels = ids.select(col("id"), col("id").as("lab")).localCheckpoint()
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < maxRounds) {
+    val init = ids.select(col("id"), col("id").as("lab")).localCheckpoint()
+    // state: (labels, labels changed by the last round)
+    val (labels, _) = try fixpoint("connectedComponents", (init, 1L),
+        maxRounds, (st: (DataFrame, Long)) => s" (${st._2} labels still " +
+          "changing) — raise maxRounds; returning partial labels would " +
+          "silently split components") { case (labels, _) =>
       val nbrMin = sym
         .join(labels.select(col("id").as("id1"), col("lab")), "id1")
         .groupBy(col("id2").as("id"))
@@ -143,24 +168,75 @@ object Curation {
       // partitioning on the cached blocks) — reverted to the eager form.
       // convergence metric observed ON the checkpoint job (one action per
       // round, not two — see checkpointWithMetric)
-      val (next, ch) = checkpointWithMetric("connectedComponents",
+      val (next, changed) = checkpointWithMetric("connectedComponents",
         stepped.join(
           stepped.select(col("id").as("lab1"), col("lab1").as("lab2")), "lab1")
         .select(col("id"), col("old"),
           least(col("lab1"), col("lab2")).as("lab")),
         count(when(col("lab") =!= col("old"), 1)))
-      changed = ch
-      labels = next.select(col("id"), col("lab"))
-      rounds += 1
-    }
-    sym.unpersist()
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxRounds rounds " +
-          s"($changed labels still changing) — raise maxRounds; returning " +
-          "partial labels would silently split components")
+      ((next.select(col("id"), col("lab")), changed), changed == 0)
+    } finally sym.unpersist()
     labels
   }
+
+  /** `docs` with the corpus size `n` beside every doc_id — the input of
+    * every derived doc graph. */
+  private def docsWithN(s: SparkSession, dir: String): DataFrame = {
+    val d = docs(s, dir).select(col("doc_id"))
+    d.crossJoin(broadcast(d.agg(count(lit(1)).as("n"))))
+  }
+
+  /** Dedup an arc list (`u`, `v`, u ≠ v) into undirected (least, greatest)
+    * pairs. */
+  private def undirected(arcs: DataFrame): DataFrame =
+    arcs.select(least(col("u"), col("v")).as("u"),
+        greatest(col("u"), col("v")).as("v"))
+      .distinct()
+
+  /** The undirected ring + affine doc graph shared by [[triangleCount]],
+    * [[clusteringCoeff]], [[graphBfs]], [[harmonicLandmarks]],
+    * [[pathCounts]], [[sssp]] and [[adamicAdar]]: ring edges doc→doc+1,
+    * doc→doc+2 plus the affine-hash edge doc→(doc·31+7) mod n, as
+    * deduplicated `u < v` pairs. Not persisted: each caller pins it its
+    * own way. */
+  private def ringGraph(s: SparkSession, dir: String): DataFrame = {
+    val withN = docsWithN(s, dir)
+    undirected(withN.select(col("doc_id").as("u"),
+        ((col("doc_id") + 1) % col("n")).as("v"))
+      .union(withN.select(col("doc_id"),
+        ((col("doc_id") + 2) % col("n")).as("v")))
+      .union(withN.select(col("doc_id"),
+        ((col("doc_id") * 31 + 7) % col("n")).as("v")))
+      .filter(col("u") =!= col("v")))
+  }
+
+  /** The directed tree + quadratic doc graph as generated: tree arc
+    * doc→⌊doc/2⌋ plus quadratic arc doc→(doc²+1) mod n, self-loops
+    * dropped, duplicates kept. */
+  private def treeArcs(s: SparkSession, dir: String): DataFrame = {
+    val withN = docsWithN(s, dir)
+    withN.filter(col("doc_id") > 0)
+      .select(col("doc_id").as("u"), expr("doc_id div 2").as("v"))
+      .union(withN.select(col("doc_id"),
+        ((col("doc_id") * col("doc_id") + 1) % col("n")).as("v")))
+      .filter(col("u") =!= col("v"))
+  }
+
+  /** [[treeArcs]] as deduplicated undirected `u < v` pairs, shared by
+    * [[assortativity]], [[kCore]] and the community queries
+    * ([[labelPropagation]], [[modularity]], [[louvainMove]]). */
+  private def docUndirected(s: SparkSession, dir: String): DataFrame =
+    undirected(treeArcs(s, dir))
+
+  /** Symmetric closure of an undirected (`u`, `v`) edge list: every edge in
+    * both directions. Any other column (e.g. [[sssp]]'s weight) rides
+    * along unchanged. */
+  private def both(und: DataFrame): DataFrame =
+    und.union(und.select(und.columns.toIndexedSeq.map {
+      case "u" => col("v").as("u")
+      case "v" => col("u").as("v")
+      case c => col(c)
+    }: _*))
 
   /** Weighted sampling WITHOUT replacement (Efraimidis–Spirakis A-Res,
     * IPL 2006 — public algorithm): each doc draws key = −ln(u)/w and the
@@ -188,6 +264,15 @@ object Curation {
       .orderBy(col("pick"))
   }
 
+  /** The 2-regular `src → dst` link graph of [[pageRank]] and
+    * [[personalizedPageRank]]: each doc links to (id*31+7) mod n and
+    * (id*17+3) mod n, n read from `withN`. */
+  private def linkEdges(withN: DataFrame): DataFrame =
+    withN.select(col("doc_id").as("src"),
+        ((col("doc_id") * 31 + 7) % col("n")).as("dst"))
+      .union(withN.select(col("doc_id").as("src"),
+        ((col("doc_id") * 17 + 3) % col("n")).as("dst")))
+
   /** 5-round damped PageRank (power iteration, d = 0.85) — the weighted
     * iterative-propagation complement to [[connectedComponents]]' min-label
     * fixpoint. The link graph is derived deterministically from doc_id
@@ -209,10 +294,7 @@ object Curation {
     val nAgg = d.agg(count(lit(1)).as("n"),
       count(lit(1)).cast("double").as("cnt"))
     val withN = d.crossJoin(broadcast(nAgg))
-    val edges = withN.select(col("doc_id").as("src"),
-        ((col("doc_id") * 31 + 7) % col("n")).as("dst"))
-      .union(withN.select(col("doc_id").as("src"),
-        ((col("doc_id") * 17 + 3) % col("n")).as("dst")))
+    val edges = linkEdges(withN)
     var ranks = withN.select(col("doc_id"), (lit(1.0) / col("cnt")).as("r"))
     for (_ <- 1 to 5) {
       val contrib = edges
@@ -244,10 +326,7 @@ object Curation {
       .withColumn("restart",
         when(col("doc_id") % 100 === 0, lit(1.0) / col("scnt"))
           .otherwise(lit(0.0)))
-    val edges = withN.select(col("doc_id").as("src"),
-        ((col("doc_id") * 31 + 7) % col("n")).as("dst"))
-      .union(withN.select(col("doc_id").as("src"),
-        ((col("doc_id") * 17 + 3) % col("n")).as("dst")))
+    val edges = linkEdges(withN)
     var ranks = withN.select(col("doc_id"), col("restart").as("r"))
     for (_ <- 1 to 5) {
       val contrib = edges
@@ -330,32 +409,32 @@ object Curation {
     * formulation — orientation provably does not change the result. Output:
     * top-20 nodes by triangle membership. */
   def triangleCount(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"))
-    val nAgg = d.agg(count(lit(1)).as("n"))
-    val withN = d.crossJoin(broadcast(nAgg))
-    val raw = withN.select(col("doc_id").as("u"),
-        ((col("doc_id") + 1) % col("n")).as("v"))
-      .union(withN.select(col("doc_id"),
-        ((col("doc_id") + 2) % col("n")).as("v")))
-      .union(withN.select(col("doc_id"),
-        ((col("doc_id") * 31 + 7) % col("n")).as("v")))
-    val und = raw.filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .distinct()
-    // degree-ordered orientation: edge points to the (deg, id)-larger end
+    val (_, oriented) = degreeOriented(ringGraph(s, dir))
+    oriented.persist() // q-cache
+    oriented.count() // eager: 4 sibling-stage consumers (see Tables.pinned)
+    trianglesPerNode(oriented).select(col("node"), col("t").as("tri_cnt"))
+      .orderBy(col("tri_cnt").desc, col("node"))
+      .limit(20)
+  }
+
+  /** Degree-ordered orientation of an undirected (`u`, `v`) edge list:
+    * each edge points from its (degree, id)-smaller end `a` to its larger
+    * end `b`. Returns the per-node degrees (`node`, `deg`) beside the
+    * oriented edges; neither is persisted. */
+  private def degreeOriented(und: DataFrame): (DataFrame, DataFrame) = {
     val deg = und.select(col("u").as("node")).union(und.select(col("v")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val oriented = und
+    val smallerU = struct(col("du"), col("u")) < struct(col("dv"), col("v"))
+    (deg, und
       .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
-      .select(
-        when(struct(col("du"), col("u")) < struct(col("dv"), col("v")),
-          col("u")).otherwise(col("v")).as("a"),
-        when(struct(col("du"), col("u")) < struct(col("dv"), col("v")),
-          col("v")).otherwise(col("u")).as("b"))
-      .persist() // q-cache
-    oriented.count() // eager: 4 sibling-stage consumers (see Tables.pinned)
+      .select(when(smallerU, col("u")).otherwise(col("v")).as("a"),
+        when(smallerU, col("v")).otherwise(col("u")).as("b")))
+  }
+
+  /** Triangles per node (`node`, `t`) over a [[degreeOriented]] edge list:
+    * each triangle is enumerated once as a→b, a→c, b→c. */
+  private def trianglesPerNode(oriented: DataFrame): DataFrame = {
     val wedges = oriented.select(col("a"), col("b"))
       .join(oriented.select(col("a"), col("b").as("c")), "a")
       .filter(col("b") =!= col("c"))
@@ -372,9 +451,7 @@ object Curation {
     tris.select(col("a").as("node"))
       .union(tris.select(col("b")))
       .union(tris.select(col("c")))
-      .groupBy(col("node")).agg(count(lit(1)).as("tri_cnt"))
-      .orderBy(col("tri_cnt").desc, col("node"))
-      .limit(20)
+      .groupBy(col("node")).agg(count(lit(1)).as("t"))
   }
 
   /** Local clustering coefficient — the per-node refinement of
@@ -388,45 +465,11 @@ object Curation {
     * Exact integers everywhere; the coefficient itself is ONE IEEE
     * division of exact ints, rounded 6 dp — engine-independent. */
   def clusteringCoeff(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"))
-    val nAgg = d.agg(count(lit(1)).as("n"))
-    val withN = d.crossJoin(broadcast(nAgg))
-    val raw = withN.select(col("doc_id").as("u"),
-        ((col("doc_id") + 1) % col("n")).as("v"))
-      .union(withN.select(col("doc_id"),
-        ((col("doc_id") + 2) % col("n")).as("v")))
-      .union(withN.select(col("doc_id"),
-        ((col("doc_id") * 31 + 7) % col("n")).as("v")))
-    val und = raw.filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .distinct()
-      .persist() // released
-    val deg = und.select(col("u").as("node")).union(und.select(col("v")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val oriented = und
-      .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
-      .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
-      .select(
-        when(struct(col("du"), col("u")) < struct(col("dv"), col("v")),
-          col("u")).otherwise(col("v")).as("a"),
-        when(struct(col("du"), col("u")) < struct(col("dv"), col("v")),
-          col("v")).otherwise(col("u")).as("b"))
-      .persist() // released
+    val und = ringGraph(s, dir).persist() // released
+    val (deg, oriented) = degreeOriented(und)
+    oriented.persist() // released
     oriented.count() // eager: 4 sibling-stage consumers (see Tables.pinned)
-    val wedges = oriented.select(col("a"), col("b"))
-      .join(oriented.select(col("a"), col("b").as("c")), "a")
-      .filter(col("b") =!= col("c"))
-    val close = oriented.select(col("a").as("b"), col("b").as("c"))
-      .union(oriented.select(col("b"), col("a").as("c")))
-    val tris = wedges.filter(col("b") < col("c"))
-      .join(close, Seq("b", "c"), "left_semi")
-      .select(col("a"), col("b"), col("c"))
-    val triPerNode = tris.select(col("a").as("node"))
-      .union(tris.select(col("b")))
-      .union(tris.select(col("c")))
-      .groupBy(col("node")).agg(count(lit(1)).as("t"))
-    val res = deg.join(triPerNode, Seq("node"), "left")
+    val res = deg.join(trianglesPerNode(oriented), Seq("node"), "left")
       .select(col("node"), col("deg"),
         coalesce(col("t"), lit(0L)).as("n_tri"),
         when(col("deg") >= 2,
@@ -453,51 +496,29 @@ object Curation {
     * edges). The oracle walks the same graph with a recursive CTE, whose
     * UNION-dedup on (node, depth) bounds exploration by n × cap. */
   def graphBfs(s: SparkSession, dir: String, maxRounds: Int = 30): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"))
-    val nAgg = d.agg(count(lit(1)).as("n"))
-    val withN = d.crossJoin(broadcast(nAgg))
-    val raw = withN.select(col("doc_id").as("u"),
-        ((col("doc_id") + 1) % col("n")).as("v"))
-      .union(withN.select(col("doc_id"),
-        ((col("doc_id") + 2) % col("n")).as("v")))
-      .union(withN.select(col("doc_id"),
-        ((col("doc_id") * 31 + 7) % col("n")).as("v")))
-    val und = raw.filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .distinct()
-    val edges = und.union(und.select(col("v").as("u"), col("u").as("v")))
-      .persist() // q-cache
-    var visited = d.sparkSession.range(1)
+    val edges = both(ringGraph(s, dir)).persist() // q-cache
+    val start = s.range(1)
       .select(lit(0L).as("node"), lit(0).as("hops")).localCheckpoint()
-    var frontier = visited
-    var rounds = 0
-    var frontierSize = 1L
-    while (frontierSize > 0 && rounds < maxRounds) {
-      // (r14-opt: keeping `visited` as a growing union of checkpointed
-      // frontiers instead of re-checkpointing it was tried — the per-round
-      // anti-join plan then grows with the round count and the added
-      // planning cost measured LARGER than the checkpoint job it saved;
-      // reverted to the full-copy checkpoint.)
-      val (next, fs) = checkpointWithMetric("graphBfs",
-        frontier
-          .join(edges, col("node") === col("u"))
-          .select(col("v").as("node"), (col("hops") + 1).as("hops"))
-          .groupBy(col("node")).agg(min(col("hops")).as("hops"))
-          .join(visited.select(col("node")), Seq("node"), "left_anti"),
-        count(lit(1)))
-      frontierSize = fs
-      // skip the final visited copy once the frontier drained: an empty
-      // `next` adds nothing and the union's only consumer is the next
-      // round's anti-join (guide §1.2)
-      if (frontierSize > 0)
-        visited = visited.union(next).localCheckpoint()
-      frontier = next
-      rounds += 1
+    val (visited, _) = fixpoint("graphBfs", (start, start), maxRounds) {
+      case (visited, frontier) =>
+        val (next, frontierSize) = checkpointWithMetric("graphBfs",
+          frontier
+            .join(edges, col("node") === col("u"))
+            .select(col("v").as("node"), (col("hops") + 1).as("hops"))
+            .groupBy(col("node")).agg(min(col("hops")).as("hops"))
+            .join(visited.select(col("node")), Seq("node"), "left_anti"),
+          count(lit(1)))
+        // skip the final visited copy once the frontier drained: an empty
+        // `next` adds nothing and the union's only consumer is the next
+        // round's anti-join (guide §1.2).
+        // (r14-opt: keeping `visited` as a growing union of checkpointed
+        // frontiers instead of re-checkpointing it was tried — the per-round
+        // anti-join plan then grows with the round count and the added
+        // planning cost measured LARGER than the checkpoint job it saved;
+        // reverted to the full-copy checkpoint.)
+        if (frontierSize == 0) ((visited, next), true)
+        else ((visited.union(next).localCheckpoint(), next), false)
     }
-    if (frontierSize > 0)
-      throw new IllegalStateException(
-        s"graphBfs did not drain the frontier within $maxRounds rounds")
     visited.orderBy(col("node"))
   }
 
@@ -526,30 +547,18 @@ object Curation {
     * K BFS jobs. */
   def harmonicLandmarks(s: SparkSession, dir: String,
       maxHops: Int = 6): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"))
-    val nAgg = d.agg(count(lit(1)).as("n"))
-    val withN = d.crossJoin(broadcast(nAgg))
-    val raw = withN.select(col("doc_id").as("u"),
-        ((col("doc_id") + 1) % col("n")).as("v"))
-      .union(withN.select(col("doc_id"),
-        ((col("doc_id") + 2) % col("n")).as("v")))
-      .union(withN.select(col("doc_id"),
-        ((col("doc_id") * 31 + 7) % col("n")).as("v")))
-    val und = raw.filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .distinct()
-    val edges = und.union(und.select(col("v").as("u"), col("u").as("v")))
-      .persist() // q-cache
-    val lm = d.filter(col("doc_id") % 97 === 0)
+    val edges = both(ringGraph(s, dir)).persist() // q-cache
+    val lm = docs(s, dir).filter(col("doc_id") % 97 === 0)
       .select(col("doc_id").as("src"))
     // Fixed small horizon ⇒ re-expand-and-min-merge beats settled-set
-    // pruning: [[graphBfs]]'s frontier discipline (anti-join vs visited +
-    // two localCheckpoints + a count per round) pays 3 extra jobs per
+    // pruning: [[graphBfs]]'s frontier discipline (anti-join vs visited, a
+    // frontier checkpoint that also observes the frontier size, and a
+    // visited copy skipped only in the last round) pays an extra job per
     // round to avoid re-joining settled nodes — worth it when rounds are
     // unbounded, but at H=6 the redundant fanout is ≤ 6× a node-count-
-    // sized relation while the saved machinery is 12 of 18 jobs
-    // (measured 14.2 → 5-7 s solo at sf0.1; edges broadcast). One
+    // sized relation. Measured against that discipline when it still paid
+    // a separate count (3 jobs per round): the saved machinery was 12 of
+    // 18 jobs (14.2 → 5-7 s solo at sf0.1; edges broadcast). One
     // localCheckpoint per round is still REQUIRED — reach is referenced
     // twice per round, so without a materialization the recompute tree
     // doubles per hop (measured 2^H blowup: 27-50 s at H=6).
@@ -585,22 +594,8 @@ object Curation {
     * accumulation and the standard "how redundant is this hub"
     * connectivity audit. */
   def pathCounts(s: SparkSession, dir: String, maxHops: Int = 6): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"))
-    val nAgg = d.agg(count(lit(1)).as("n"))
-    val withN = d.crossJoin(broadcast(nAgg))
-    val raw = withN.select(col("doc_id").as("u"),
-        ((col("doc_id") + 1) % col("n")).as("v"))
-      .union(withN.select(col("doc_id"),
-        ((col("doc_id") + 2) % col("n")).as("v")))
-      .union(withN.select(col("doc_id"),
-        ((col("doc_id") * 31 + 7) % col("n")).as("v")))
-    val und = raw.filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .distinct()
-    val edges = und.union(und.select(col("v").as("u"), col("u").as("v")))
-      .persist() // released
-    var frontier = d.filter(col("doc_id") % 97 === 0)
+    val edges = both(ringGraph(s, dir)).persist() // released
+    var frontier = docs(s, dir).filter(col("doc_id") % 97 === 0)
       .select(col("doc_id").as("landmark"), col("doc_id").as("node"),
         lit(0L).as("dist"), lit(1L).as("sigma"))
       .localCheckpoint()
@@ -620,7 +615,7 @@ object Curation {
     }
     // every round was eagerly localCheckpointed, so the returned plan
     // reads only checkpointed RDDs — release the cached edge frame now
-    // instead of leaking it into the 373-query driver sweep
+    // instead of leaking it into a full driver sweep
     edges.unpersist()
     settled.orderBy(col("landmark"), col("node"))
   }
@@ -637,19 +632,7 @@ object Curation {
     * integers from one grouped pass; the correlation is moment algebra
     * over the edge relation. */
   def assortativity(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"))
-    val nAgg = d.agg(count(lit(1)).as("n"))
-    val withN = d.crossJoin(broadcast(nAgg))
-    val raw = withN.filter(col("doc_id") > 0)
-      .select(col("doc_id").as("u"), expr("doc_id div 2").as("v"))
-      .union(withN.select(col("doc_id"),
-        ((col("doc_id") * col("doc_id") + 1) % col("n")).as("v")))
-    val und = raw.filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .distinct()
-    val sym = und.union(und.select(col("v").as("u"), col("u").as("v")))
-      .persist() // q-cache
+    val sym = both(docUndirected(s, dir)).persist() // q-cache
     val deg = sym.groupBy(col("u").as("node"))
       .agg(count(lit(1)).as("deg"))
     val ed = sym
@@ -689,44 +672,23 @@ object Curation {
     * The oracle re-derives every distance through a recursive CTE whose
     * UNION-dedup on (node, dist) is kept finite by [[SsspCostCap]]. */
   def sssp(s: SparkSession, dir: String, maxRounds: Int = 30): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"))
-    val nAgg = d.agg(count(lit(1)).as("n"))
-    val withN = d.crossJoin(broadcast(nAgg))
-    val raw = withN.select(col("doc_id").as("u"),
-        ((col("doc_id") + 1) % col("n")).as("v"))
-      .union(withN.select(col("doc_id"),
-        ((col("doc_id") + 2) % col("n")).as("v")))
-      .union(withN.select(col("doc_id"),
-        ((col("doc_id") * 31 + 7) % col("n")).as("v")))
-    val und = raw.filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .distinct()
+    val und = ringGraph(s, dir)
       .withColumn("w", lit(1) + (col("u") * 7 + col("v") * 13) % 5)
-    val edges = und.union(und.select(col("v"), col("u"), col("w")))
-      .persist() // q-cache
-    var best = d.sparkSession.range(1)
+    val edges = both(und).persist() // q-cache
+    val start = s.range(1)
       .select(lit(0L).as("node"), lit(0L).as("dist")).localCheckpoint()
-    var frontier = best
-    var rounds = 0
-    var active = 1L
-    while (active > 0 && rounds < maxRounds) {
-      val relaxed = frontier.join(edges, col("node") === col("u"))
-        .select(col("v").as("node"), (col("dist") + col("w")).as("dist"))
-      val merged = best.union(relaxed)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-      val (improved, act) = checkpointWithMetric("sssp",
-        merged.join(best, Seq("node", "dist"), "left_anti"),
-        count(lit(1)))
-      active = act
-      best = merged
-      frontier = improved
-      rounds += 1
+    val (best, _) = fixpoint("sssp", (start, start), maxRounds) {
+      case (best, frontier) =>
+        val relaxed = frontier.join(edges, col("node") === col("u"))
+          .select(col("v").as("node"), (col("dist") + col("w")).as("dist"))
+        val merged = best.union(relaxed)
+          .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+          .localCheckpoint()
+        val (improved, active) = checkpointWithMetric("sssp",
+          merged.join(best, Seq("node", "dist"), "left_anti"),
+          count(lit(1)))
+        ((merged, improved), active == 0)
     }
-    if (active > 0)
-      throw new IllegalStateException(
-        s"sssp did not converge within $maxRounds rounds")
     val over = best.filter(col("dist") > SsspCostCap).count()
     if (over > 0)
       throw new IllegalStateException(
@@ -752,22 +714,9 @@ object Curation {
     * no second pass. Fully oracle-checked: same construction in SQL,
     * round(…, 9) absorbs float-sum ordering (≤ max-deg ~O(1) terms). */
   def adamicAdar(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"))
-    val nAgg = d.agg(count(lit(1)).as("n"))
-    val withN = d.crossJoin(broadcast(nAgg))
-    val raw = withN.select(col("doc_id").as("u"),
-        ((col("doc_id") + 1) % col("n")).as("v"))
-      .union(withN.select(col("doc_id"),
-        ((col("doc_id") + 2) % col("n")).as("v")))
-      .union(withN.select(col("doc_id"),
-        ((col("doc_id") * 31 + 7) % col("n")).as("v")))
-    val und = raw.filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .distinct()
-      .persist() // q-cache
+    val und = ringGraph(s, dir).persist() // q-cache
     und.count() // eager: 4 sibling-stage consumers (see Tables.pinned)
-    val sym = und.union(und.select(col("v").as("u"), col("u").as("v")))
+    val sym = both(und)
     val deg = sym.groupBy(col("u").as("z")).agg(count(lit(1)).as("deg"))
     // wedges through z: (x, z) ⋈ (z, y), x < y canonical; weight by z's
     // degree at wedge time (one broadcast-sized dim join)
@@ -799,12 +748,11 @@ object Curation {
     * Returns (node, core_deg) — survivors with their within-core degree. */
   private[graft] def kCoreOf(und: DataFrame, k: Int,
                              maxRounds: Int = 30): DataFrame = {
-    var cur = und.localCheckpoint()
-    var n = -1L
-    var rounds = 0
-    while (rounds < maxRounds) {
-      val sym = cur.union(cur.select(col("v").as("u"), col("u").as("v")))
-      val surv = sym.groupBy(col("u").as("node"))
+    // state: (surviving edges, their count; -1 before the first round).
+    // Converged once a round removes no edge.
+    val (core, _) = fixpoint("kCoreOf", (und.localCheckpoint(), -1L),
+        maxRounds) { case (cur, n) =>
+      val surv = both(cur).groupBy(col("u").as("node"))
         .agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("node"))
@@ -814,18 +762,11 @@ object Curation {
           .join(surv.select(col("node").as("v")), Seq("v"), "left_semi")
           .select(col("u"), col("v")),
         count(lit(1)))
-      rounds += 1
-      if (m == n) {
-        val symF = next.union(next.select(col("v").as("u"), col("u").as("v")))
-        return symF.groupBy(col("u").as("node"))
-          .agg(count(lit(1)).as("core_deg"))
-          .orderBy(col("node"))
-      }
-      n = m
-      cur = next
+      ((next, m), m == n)
     }
-    throw new IllegalStateException(
-      s"kCoreOf did not reach a fixpoint within $maxRounds rounds")
+    both(core).groupBy(col("u").as("node"))
+      .agg(count(lit(1)).as("core_deg"))
+      .orderBy(col("node"))
   }
 
   /** k=3 core of a degree-SKEWED derived doc graph (binary-tree spine
@@ -837,20 +778,8 @@ object Curation {
     * identical-arithmetic CTE rounds in DuckDB — fixpoint (6) + margin;
     * peeling is monotone, so extra unrolled rounds past the fixpoint are
     * provably no-ops and the unrolled result equals the Spark fixpoint. */
-  def kCore(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"))
-    val nAgg = d.agg(count(lit(1)).as("n"))
-    val withN = d.crossJoin(broadcast(nAgg))
-    val raw = withN.filter(col("doc_id") > 0)
-      .select(col("doc_id").as("u"), expr("doc_id div 2").as("v"))
-      .union(withN.select(col("doc_id"),
-        ((col("doc_id") * col("doc_id") + 1) % col("n")).as("v")))
-    val und = raw.filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .distinct()
-    kCoreOf(und, k = 3)
-  }
+  def kCore(s: SparkSession, dir: String): DataFrame =
+    kCoreOf(docUndirected(s, dir), k = 3)
 
   /** DuckDB twin of [[kCore]]: 10 unrolled peel rounds (fixpoint + margin;
     * monotonicity makes the extra rounds no-ops). Every round CTE is
@@ -882,24 +811,11 @@ object Curation {
        |GROUP BY u ORDER BY u""".stripMargin
   }
 
-  /** Synchronous label-propagation communities (Raghavan, Albert & Kumara,
-    * Phys. Rev. E 2007) over the same tree+quadratic doc graph as
-    * [[kCore]], made fully DETERMINISTIC — and therefore oracle-checkable
-    * — by (a) a fixed 4 synchronous rounds instead of the paper's
-    * randomized asynchronous sweep, and (b) a (max count, min label)
-    * tie-break. Each round is one join of the symmetric edge list against
-    * the label relation, one (node, label) count, and one arg-min —
-    * `min_by(lab, struct(-cnt, lab))` keeps the per-node pick a pure
-    * aggregate (no per-node sort window), so a round costs two keyed
-    * exchanges regardless of degree skew. The oracle unrolls the 4 rounds
-    * as MATERIALIZED CTEs with a row_number tie-break — same pick,
-    * different machinery, value-identical. */
   /** The propagation loop of [[labelPropagation]], over any undirected
     * edge list — factored out so specs can pin crafted-graph rounds. */
   private[graft] def labelPropOf(nodes: DataFrame, und: DataFrame,
                                  rounds: Int = 4): DataFrame = {
-    val sym = und.union(und.select(col("v").as("u"), col("u").as("v")))
-      .persist() // q-cache
+    val sym = both(und).persist() // q-cache
     var labels = nodes.select(col("node"), col("node").as("lab"))
     for (_ <- 1 to rounds) {
       labels = sym
@@ -911,24 +827,6 @@ object Curation {
     }
     labels.select(col("node"), col("lab").as("community"))
       .orderBy(col("node"))
-  }
-
-  /** The undirected tree+quadratic doc graph shared by the community
-    * queries ([[labelPropagation]], [[modularity]], [[louvainMove]]):
-    * tree edge doc→⌊doc/2⌋ plus quadratic edge doc→(doc²+1) mod n,
-    * deduplicated as (least, greatest) pairs. */
-  private def docUndirected(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"))
-    val nAgg = d.agg(count(lit(1)).as("n"))
-    val withN = d.crossJoin(broadcast(nAgg))
-    val raw = withN.filter(col("doc_id") > 0)
-      .select(col("doc_id").as("u"), expr("doc_id div 2").as("v"))
-      .union(withN.select(col("doc_id"),
-        ((col("doc_id") * col("doc_id") + 1) % col("n")).as("v")))
-    raw.filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .distinct()
   }
 
   private val comMemo = new java.util.concurrent.ConcurrentHashMap[
@@ -945,12 +843,24 @@ object Curation {
     comMemo.computeIfAbsent((s, dir), _ => {
       val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
       val out = s"${Tables.workDir(s)}/doc_communities_$safe.parquet"
-      val d = docs(s, dir).select(col("doc_id"))
-      labelPropOf(d.select(col("doc_id").as("node")), docUndirected(s, dir))
+      labelPropOf(docs(s, dir).select(col("doc_id").as("node")),
+        docUndirected(s, dir))
         .write.mode("overwrite").parquet(out)
       s.read.parquet(out)
     })
 
+  /** Synchronous label-propagation communities (Raghavan, Albert & Kumara,
+    * Phys. Rev. E 2007) over the same tree+quadratic doc graph as
+    * [[kCore]], made fully DETERMINISTIC — and therefore oracle-checkable
+    * — by (a) a fixed 4 synchronous rounds instead of the paper's
+    * randomized asynchronous sweep, and (b) a (max count, min label)
+    * tie-break. Each round is one join of the symmetric edge list against
+    * the label relation, one (node, label) count, and one arg-min —
+    * `min_by(lab, struct(-cnt, lab))` keeps the per-node pick a pure
+    * aggregate (no per-node sort window), so a round costs two keyed
+    * exchanges regardless of degree skew. The oracle unrolls the 4 rounds
+    * as MATERIALIZED CTEs with a row_number tie-break — same pick,
+    * different machinery, value-identical. */
   def labelPropagation(s: SparkSession, dir: String): DataFrame =
     docCommunities(s, dir).orderBy(col("node"))
 
@@ -967,7 +877,7 @@ object Curation {
   def modularity(s: SparkSession, dir: String): DataFrame = {
     val und = docUndirected(s, dir)
     val coms = docCommunities(s, dir)
-    val sym = und.union(und.select(col("v").as("u"), col("u").as("v")))
+    val sym = both(und)
     val deg = sym.groupBy(col("u").as("node")).agg(count(lit(1)).as("d"))
     val mAgg = und.agg(count(lit(1)).as("m"))
     val internal = und
@@ -1004,7 +914,7 @@ object Curation {
   def louvainMove(s: SparkSession, dir: String): DataFrame = {
     val und = docUndirected(s, dir)
     val coms = docCommunities(s, dir)
-    val sym = und.union(und.select(col("v").as("u"), col("u").as("v")))
+    val sym = both(und)
     val deg = sym.groupBy(col("u").as("node")).agg(count(lit(1)).as("d"))
     val mAgg = und.agg(count(lit(1)).as("m"))
     val sig = coms.join(deg, Seq("node"), "left").na.fill(0L, Seq("d"))
@@ -1074,18 +984,9 @@ object Curation {
     * link-prediction and community queries discard. 3 exact integer
     * rounds; oracle = unrolled MATERIALIZED CTE rounds (same pattern as
     * [[labelPropagation]]). */
-  def hits(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"))
-    val nAgg = d.agg(count(lit(1)).as("n"))
-    val withN = d.crossJoin(broadcast(nAgg))
-    val e = withN.filter(col("doc_id") > 0)
-      .select(col("doc_id").as("u"), expr("doc_id div 2").as("v"))
-      .union(withN.select(col("doc_id").as("u"),
-        ((col("doc_id") * col("doc_id") + 1) % col("n")).as("v")))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-    hitsOf(d.select(col("doc_id").as("node")), e)
-  }
+  def hits(s: SparkSession, dir: String): DataFrame =
+    hitsOf(docs(s, dir).select(col("doc_id").as("node")),
+      treeArcs(s, dir).distinct())
 
   /** DuckDB twin of [[hits]]: 3 unrolled a/h rounds over the directed
     * edge relation; HUGEINT sums cast back to BIGINT. */

@@ -398,6 +398,13 @@ class CurationSpec extends SparkSpec {
     // a weighted path may be strictly cheaper than greedy-by-hops: the
     // max weighted distance stays under the oracle cost cap with margin
     assert(dist.values.max <= 60L)
+    // one round cannot reach every node: both loops fail loudly at the cap
+    // instead of returning a partial distance map
+    Seq[() => Any](() => Curation.sssp(spark, sf001, 1),
+        () => Curation.graphBfs(spark, sf001, 1)).foreach { run =>
+      val ex = intercept[IllegalStateException](run())
+      assert(ex.getMessage.contains("did not converge"))
+    }
   }
 
   test("harmonic landmarks match an exact JVM BFS recompute of the same graph") {
